@@ -9,6 +9,7 @@ search, text analysis, multimodal plumbing) such a pipeline needs at 100 TB.
 
 Layout:
     kernel        pure-Python exact reference semantics (no Spark imports)
+    zipcache      per-process fix for CPython 3.11's per-task zip re-reads
     functions/    vectorized pandas-UDF + Column-expression libraries
     operators/    dedup, politeness, frontier ranking, similarity, multimodal
     sources/      corpus generator, checkpointed table store, sinks
@@ -17,3 +18,10 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from acrawler_spark import zipcache as _zipcache
+
+# every module a UDF unpickles into (kernel, functions.udfs, operators.dedup)
+# imports this package first, so each Python worker gets the stat-gated zip
+# reload before its next task (see zipcache.py)
+_zipcache.install()

@@ -58,8 +58,8 @@ class BloomSidecar:
     Layout: ``<path>/meta.json`` + ``<path>/bucket_<i>.npy`` (uint64 words).
     Ownership is **partition-owned, executor-side** in both directions:
 
-    * build (``updating_scan``): admitted fingerprints are repartitioned by
-      ``_bucket`` so exactly one task holds each bucket; that task ORs the
+    * build (``updating_scan``): admitted fingerprints are hash-partitioned
+      on ``_bucket`` so exactly one task holds each bucket; that task ORs the
       new bits into its bucket's ``.npy`` (atomic tmp+rename) while passing
       the rows through unchanged — the Bloom update rides the seen-delta
       write job, no driver collect, no extra job.
@@ -187,9 +187,15 @@ class BloomSidecar:
 
     def updating_scan(self, df: DataFrame) -> DataFrame:
         """Fuse the Bloom build into whatever job consumes ``df`` (the seen-
-        delta write): repartition by ``_bucket`` (one owner task per bucket),
-        OR the batch's bits into that bucket's ``.npy``, pass rows through
-        with the original schema. Requires a ``fingerprint`` column."""
+        delta write): hash-repartition on ``_bucket`` (one owner task per
+        bucket), OR the batch's bits into that bucket's ``.npy``, pass rows
+        through with the original schema. Requires a ``fingerprint`` column.
+
+        Width is ``min(n_buckets, defaultParallelism)``, not ``n_buckets``:
+        hash partitioning on ``_bucket`` still sends every row of a bucket
+        to one task, and a task owns every bucket it receives. Each Python
+        task carries a fixed worker cost, so 16 buckets on 4 cores run as 4
+        tasks (and the seen delta lands as <= 4 files), not 16."""
         self.ensure_meta()
         path, n_buckets, m_bits = self.path, self.n_buckets, self.m_bits
         out_schema = df.schema
@@ -206,7 +212,8 @@ class BloomSidecar:
             for b in touched:
                 side._write_bucket(b)
 
-        hashed = _hash_cols(df, self.n_buckets).repartition(self.n_buckets, "_bucket")
+        width = min(self.n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+        hashed = _hash_cols(df, self.n_buckets).repartition(width, "_bucket")
         return hashed.mapInPandas(update, schema=out_schema)
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from acrawler_spark.functions.url import canonicalize_col, fingerprint_col, host_col
+from acrawler_spark.session import local_frame
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -101,7 +102,8 @@ def seeds_frontier(
                 bool(s.get("dont_filter", False)),
             )
         )
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "url string, seed_idx long, method string, priority int, recrawl long, "
         "status_allowed array<int>, family string, callback_family string, "

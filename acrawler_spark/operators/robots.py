@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from acrawler_spark.session import local_frame
+
 RULES_SCHEMA = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
@@ -62,7 +64,7 @@ def rules_df(spark: SparkSession, rules: dict[str, dict]) -> DataFrame:
         (h, list(r.get("disallow", [])), r.get("crawl_delay"))
         for h, r in sorted(rules.items())
     ]
-    return spark.createDataFrame(rows, RULES_SCHEMA)
+    return local_frame(spark, rows, RULES_SCHEMA)
 
 
 def delay_budgets_df(rules: DataFrame, round_seconds: float) -> DataFrame:

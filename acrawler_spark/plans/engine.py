@@ -14,12 +14,14 @@ task (crawler.py:61-136), quantized to a logical clock:
     -> retry / recrawl / defer branches                     [lifecycle]
     -> commit as one snapshot                               [persistence]
 
-Steady-state round = exactly THREE Spark jobs: (1) pages stage (fetch join
-+ parse + counters via observe), (2) seen delta with the Bloom build fused
+Steady-state round = THREE write actions: (1) pages stage (fetch join +
+parse + counters via observe), (2) seen delta with the Bloom build fused
 into its write, (3) frontier rewrite as a broadcast anti-join (windows run
-once) carrying next-round due stats in the manifest. items / fetch_log /
-failed are virtual projections of the pages delta (plans/views.py);
-metrics materialize once per crawl from the manifest.
+once) carrying next-round due stats in the manifest. Under AQE each query
+stage of an action is submitted as its own Spark job, so the job count is
+several times higher (a one-round polite crawl submits ~44). items /
+fetch_log / failed are virtual projections of the pages delta
+(plans/views.py); metrics materialize once per crawl from the manifest.
 
 Determinism contract (tests/oracle.py mirrors it 1:1): logical clock
 now = t0 + round; total order (priority DESC, exetime ASC, fingerprint ASC);
@@ -48,6 +50,7 @@ from acrawler_spark.operators.politeness import (
     rank_keys,
 )
 from acrawler_spark.plans.views import fetch_log_view, items_view
+from acrawler_spark.session import local_frame
 from acrawler_spark.sources.store import CheckpointStore
 
 
@@ -446,7 +449,7 @@ class CrawlEngine:
 
     def discard_prep(self, prep: dict | None) -> None:
         """Release a prepared-but-unclaimed round's caches (idle jump, inbox
-        arrival, crawl end, max_rounds)."""
+        arrival, crawl end)."""
         if prep is None:
             return
         prep["selected"].unpersist()
@@ -456,8 +459,9 @@ class CrawlEngine:
     def discard_prefetch(self, pf: dict | None) -> None:
         """Release an unclaimed full prefetch: wait out its in-flight job,
         drop its caches, and remove the staged (never-committed) pages
-        delta. Rare path — inbox arrival between launch and claim, crawl
-        end, or max_rounds."""
+        delta. Rare path — inbox arrival between launch and claim, or the
+        crawl ending early (an ``until_ancestor`` stop, an error). The
+        max_rounds cutoff never launches one (run_round's ``max_round``)."""
         if pf is None:
             return
         try:
@@ -614,7 +618,11 @@ class CrawlEngine:
         corpus: DataFrame,
         prep: dict | None = None,
         prefetch: dict | None = None,
+        max_round: int | None = None,
     ) -> dict:
+        """Run round ``rnd`` and commit it. ``max_round`` is the caller's
+        last round: at it, the commit launches no next-round prefetch or
+        prepare (work that would only be discarded)."""
         cfg = self.cfg
         now = cfg.t0 + rnd * cfg.round_seconds
         wall_start = time.monotonic()
@@ -858,7 +866,7 @@ class CrawlEngine:
                 )
             admitted = admitted.persist()
         else:
-            admitted = self.spark.createDataFrame([], FRONTIER_SCHEMA).persist()
+            admitted = local_frame(self.spark, [], FRONTIER_SCHEMA).persist()
 
         # retry branch (crawler.py:98-114): failed & tries_done <= max_tries;
         # ignore_exception rows never retry (task.py:51)
@@ -896,9 +904,10 @@ class CrawlEngine:
         )
 
         # -- commit (staged writes, then atomic manifest bump) ----------------
-        # Per-round job budget (VERDICT r1 scaling fix): exactly THREE Spark
-        # jobs in the steady state — pages stage, seen (+Bloom fused),
-        # frontier — and the seen/frontier jobs (plus optional spec-items /
+        # Per-round action budget (VERDICT r1 scaling fix): THREE write
+        # actions in the steady state — pages stage, seen (+Bloom fused),
+        # frontier; AQE runs each query stage of an action as its own Spark
+        # job — and the seen/frontier writes (plus optional spec-items /
         # lineage) are SUBMITTED CONCURRENTLY from driver threads, so their
         # per-stage scheduling latencies overlap instead of serializing.
         # items/fetch_log/failed are virtual projections of the pages delta;
@@ -1087,8 +1096,10 @@ class CrawlEngine:
             # synchronous rounds — a prefetch it never claims could race
             # another engine instance on the same store (staged-dir
             # delete/overwrite under an in-flight write)
+            has_next = max_round is None or rnd < max_round
             if (
                 self._in_run
+                and has_next
                 and n_adm_cached > 0
                 and not (self.feeder is not None and self.feeder.pending_files())
             ):
@@ -1146,6 +1157,7 @@ class CrawlEngine:
             now_next = cfg.t0 + (rnd + 1) * cfg.round_seconds
             if (
                 self._next_pages is None  # full prefetch already covers it
+                and has_next
                 and fstats["n"] > 0
                 and fstats["min_exetime"] is not None
                 and fstats["min_exetime"] <= now_next
@@ -1228,7 +1240,8 @@ class CrawlEngine:
         ]
         if not rows:
             return
-        metrics = self.spark.createDataFrame(
+        metrics = local_frame(
+            self.spark,
             sorted(rows),
             "round int, family string, host string, success long, fail long, "
             "retried long, rescheduled long, admitted long, selected long, wall_ms long",
@@ -1301,7 +1314,9 @@ class CrawlEngine:
                     # the seeds) or the loop moved — recompute inline
                     self.discard_prep(prep)
                     prep = None
-                history.append(self.run_round(rnd, corpus, prep=prep, prefetch=pf))
+                history.append(
+                    self.run_round(rnd, corpus, prep=prep, prefetch=pf, max_round=max_rounds)
+                )
                 prep, self._next_prep = self._next_prep, None
                 pf, self._next_pages = self._next_pages, None
                 rnd += 1

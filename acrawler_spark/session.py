@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -126,3 +127,23 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | T.StructType) -> DataFrame:
+    """DataFrame over driver-side rows (tuples in ``schema`` order), shipped
+    to the JVM as one Arrow table.
+
+    ``spark.createDataFrame(list)`` parallelizes pickled rows as a Python
+    RDD: every evaluation runs defaultParallelism Python tasks just to
+    unpickle them, each paying the Python worker's fixed per-task cost, in
+    a worker pool of their own that never imports the engine (so never
+    gets its zip-cache fix). An Arrow table is decoded JVM-side: no Python
+    task at all."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)

@@ -72,12 +72,25 @@ def assert_match(spark, store, history, expected):
 
 
 def test_unbounded_crawl_matches_oracle(spark, tmp_path):
+    import os
+
     engine, store, history, expected, pages = run_both(spark, tmp_path)
     assert_match(spark, store, history, expected)
     # sanity: the crawl actually covered the graph (3 hosts x 13 pages,
     # minus unreachable-by-pattern none) and hit the dead-link retry path
     assert sum(h["ok"] for h in history) > 30
     assert sum(h["failed"] for h in history) > 0
+    # 16 Bloom buckets under local[4]: the Bloom build runs one task per
+    # core, so every seen delta (bootstrap + one per round) has at most
+    # defaultParallelism files
+    width = spark.sparkContext.defaultParallelism
+    assert engine.cfg.bloom_buckets > width
+    seen_root = os.path.join(store.root, "seen")
+    deltas = [d for d in os.listdir(seen_root) if d.startswith("delta_round=")]
+    assert len(deltas) == len(history) + 1
+    for d in deltas:
+        files = [f for f in os.listdir(os.path.join(seen_root, d)) if f.endswith(".parquet")]
+        assert len(files) <= width, (d, files)
 
 
 def test_extracted_text_equals_corpus_oracle_column(spark, tmp_path):

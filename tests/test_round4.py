@@ -352,11 +352,25 @@ def test_robots_gate_blocks_by_prefix(spark, sf001):
 # -- round software-pipelining (prefetch claim/discard, engine.py run loop) --
 
 
+def _record_job_labels(engine) -> list[str]:
+    """Every Spark job description the engine sets, in submission order."""
+    labels: list[str] = []
+    job = engine._job
+
+    def recording(label):
+        labels.append(label)
+        return job(label)
+
+    engine._job = recording
+    return labels
+
+
 def test_prefetch_discard_at_max_rounds_leaves_no_staged_files(spark, tmp_path):
-    """A max_rounds cutoff mid-growth discards the prefetched next round:
-    its staged pages delta must be gone (abort protocol), the manifest must
-    end at the cutoff round, and a fresh engine resuming on the same store
-    must converge to exactly the uninterrupted run's final state."""
+    """A max_rounds cutoff mid-growth computes nothing past the cutoff: no
+    round-2 job is submitted (neither the full prefetch nor the prepare
+    starts), no round-2 delta is staged, the manifest ends at the cutoff
+    round, and a fresh engine resuming on the same store converges to
+    exactly the uninterrupted run's final state."""
     import os
 
     from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
@@ -371,11 +385,14 @@ def test_prefetch_discard_at_max_rounds_leaves_no_staged_files(spark, tmp_path):
 
     s_cut = CheckpointStore(str(tmp_path / "cut"), spark)
     e = CrawlEngine(spark, cfg, s_cut)
-    e.run(corpus, max_rounds=1)  # round 2 was prefetched mid-round-1
+    labels = _record_job_labels(e)
+    e.run(corpus, max_rounds=1)  # round 1 admits links: round 2 is due
     assert s_cut.last_round == 1
+    assert any(x.startswith("r1 ") for x in labels), labels
+    assert not [x for x in labels if x.startswith("r2 ")], labels
     assert not os.path.exists(
         os.path.join(str(tmp_path / "cut"), "pages", "delta_round=2")
-    ), "discarded prefetch left staged files"
+    ), "a round past max_rounds left staged files"
 
     CrawlEngine(spark, cfg, CheckpointStore(str(tmp_path / "cut"), spark)).run(corpus)
 
@@ -388,6 +405,31 @@ def test_prefetch_discard_at_max_rounds_leaves_no_staged_files(spark, tmp_path):
         return seen, sched
 
     assert state(s_cut) == state(s_full)
+
+
+def test_prefetch_discard_at_crawl_end_leaves_no_staged_files(spark, tmp_path):
+    """A crawl that stops while a prefetched round is in flight discards
+    it: run(until_ancestor=<a group with no rows>) stops after round 1,
+    whose commit launched round 2's full prefetch (its pages job ran). The
+    staged round-2 delta must be gone (abort protocol) and the manifest
+    must end at round 1."""
+    import os
+
+    from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
+
+    corpus = fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3)
+    cfg = CrawlConfig(
+        seeds=seed_urls(2), follow_patterns=[r"site\d+\.test"], bloom_bits=1 << 14
+    )
+    store = CheckpointStore(str(tmp_path / "cut"), spark)
+    e = CrawlEngine(spark, cfg, store)
+    labels = _record_job_labels(e)
+    e.run(corpus, until_ancestor="no-such-group")
+    assert store.last_round == 1
+    assert any(x.startswith("r2 pages") for x in labels), labels
+    assert not os.path.exists(
+        os.path.join(str(tmp_path / "cut"), "pages", "delta_round=2")
+    ), "discarded prefetch left staged files"
 
 
 def test_pipelined_rounds_report_mode(spark, tmp_path):
