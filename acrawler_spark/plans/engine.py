@@ -31,6 +31,7 @@ within-round discovery order (parent rank, link position).
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -235,6 +236,74 @@ def build_misses(
     ).withColumn("status", F.lit(404))
 
 
+@dataclass
+class Selection:
+    """One round's selected rows (``CrawlEngine._prepare_round``): the
+    persisted politeness/round-cap output and its schedule rank."""
+
+    selected: DataFrame
+    selected_ranked: DataFrame
+    rank_cache: DataFrame | None
+    bounded: bool  # broadcast hint proven safe (CrawlConfig.broadcast_selected)
+    n_sel: int | None = None  # |selected| once counted (prefetch or miss check)
+
+    def caches(self) -> list[DataFrame]:
+        return [self.selected] + ([self.rank_cache] if self.rank_cache is not None else [])
+
+
+@dataclass
+class Prefetch:
+    """Round ``rnd`` computed ahead by the previous round's commit; ``fut``
+    yields ``(Selection, pages Observation, staged columns)``. ``release``
+    holds the launching round's caches (the prefetch reads its admitted
+    rows): they live on this driver-side handle, so whoever retires it (the
+    claim or a discard, after a successful or a failed job) unpersists
+    them."""
+
+    rnd: int
+    fut: Future
+    release: list[DataFrame]
+
+
+@dataclass
+class RoundState:
+    """What one round's stages hand each other (``CrawlEngine.run_round``)."""
+
+    rnd: int
+    now: float
+    corpus: DataFrame
+    frontier: DataFrame  # round-start frontier (+ this round's inbox seeds)
+    seen: DataFrame  # round-start seen snapshot
+    timing: dict
+    start: float  # monotonic clock at round start, before any prefetch claim
+    # select
+    sel: Selection | None = None
+    inbox_files: list[str] = field(default_factory=list)
+    inbox_n: int = 0  # raw inbox url count — free at drain, bounds admitted
+    new_seed_rows: DataFrame | None = None
+    robots_blocked_fps: DataFrame | None = None
+    # fetch
+    pages: DataFrame | None = None
+    counts: dict[str, int] = field(default_factory=dict)
+    n_defer_user: int = 0
+    # follow
+    spec_items: DataFrame | None = None
+    admitted: DataFrame | None = None
+    core_union: DataFrame | None = None
+
+    def __post_init__(self) -> None:
+        self._last = self.start
+
+    def tick(self, label: str) -> None:
+        t = time.monotonic()
+        self.timing[label] = round(t - self._last, 2)
+        self._last = t
+
+    def caches(self) -> list[DataFrame]:
+        seeds = [self.new_seed_rows] if self.new_seed_rows is not None else []
+        return [*self.sel.caches(), self.admitted, *seeds]
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, store: CheckpointStore):
         if cfg.follow_callbacks not in ("inherit", "reset"):
@@ -274,16 +343,12 @@ class CrawlEngine:
         else:
             self.robots = None
             self.robots_delay = None
-        # handle to the next round's pre-computed selection (filled by
-        # run_round's commit pool, claimed or discarded by run())
-        self._next_prep: dict | None = None
-        # full next-round prefetch: {"rnd": int, "fut": Future} whose result
-        # is {"prep", "obs_pages", "staged_cols", "release"} — the prepared
-        # selection PLUS the staged pages delta for round rnd, computed on
-        # the engine-level pipeline pool while the current round's commit
-        # tail drains (claimed or discarded by run())
-        self._next_pages: dict | None = None
-        self._pipe_pool = None  # lazy ThreadPoolExecutor, engine lifetime
+        # the next round's selection + staged pages delta, computed on the
+        # pipeline pool while the current round's commit tail drains
+        # (launched by _launch_prefetch, retired by _claim_prefetch or
+        # discard_prefetch)
+        self._prefetch: Prefetch | None = None
+        self._pipe_pool: ThreadPoolExecutor | None = None  # lazy, engine lifetime
         self._in_run = False  # True while run() drives the round loop
 
     @contextmanager
@@ -358,41 +423,34 @@ class CrawlEngine:
              "frontier_min_exetime": fstats["min_exetime"]},
         )
 
-    # -- one round ------------------------------------------------------------
+    # -- one round: selection and the next-round prefetch ---------------------
 
     def _prepare_round(
         self,
         rnd: int,
-        frontier: DataFrame | None,
-        inbox_n: int,
-        frontier_n: int | None,
-        materialize: bool,
-    ) -> dict:
-        """Round `rnd`'s selection: eligibility pushdown → robots split →
-        salted politeness windows → round cap → persist (+ rank). READ-ONLY
-        — stages nothing, so it may run from the PREVIOUS round's commit
-        pool as soon as that round's frontier files are complete,
-        overlapping the seen chain's tail (``materialize=True`` runs one
-        count to pull the politeness shuffle forward and warm the cache;
-        the count doubles as the miss fast-path's |selected|). `now` is
-        deterministic (t0 + rnd·round_seconds), so a prepared selection is
-        byte-identical to what the round itself would compute.
+        frontier: DataFrame,
+        inbox_n: int = 0,
+        frontier_n: int | None = None,
+    ) -> Selection:
+        """Round `rnd`'s selection over ``frontier``: eligibility pushdown →
+        robots split → salted politeness windows → round cap → persist
+        (+ rank). Lazy and READ-ONLY — it stages nothing, so the previous
+        round's commit may build it for a prefetch over its in-memory next
+        frontier. `now` is deterministic (t0 + rnd·round_seconds), so a
+        prefetched selection is byte-identical to what the round itself
+        would compute.
 
-        ``frontier`` None reads the given round's committed files (prep
-        path); the inline path passes its (possibly seed-unioned) DF.
-        ``frontier_n`` None falls back to the manifest stats (inline path);
-        the prep path passes the in-memory count observed during the
-        frontier write (the manifest entry is not committed yet)."""
+        ``frontier_n`` is the frontier's row count for the broadcast bound:
+        None reads the manifest stats (inline path); a prefetch passes the
+        count its round observed (the manifest entry is not committed yet).
+        ``inbox_n`` adds this round's raw inbox url count."""
         cfg = self.cfg
         now = cfg.t0 + rnd * cfg.round_seconds
-        if frontier is None:
-            frontier = self.store.read_frontier(rnd - 1)
         eligible = frontier.filter(F.col("exetime") <= F.lit(now))
-        robots_blocked = None
         if self.robots is not None:
             from acrawler_spark.operators.robots import apply_robots
 
-            eligible, robots_blocked = apply_robots(eligible, self.robots)
+            eligible, _ = apply_robots(eligible, self.robots)
         # deferred (eligible-but-over-budget) rows are never materialized:
         # the new frontier is frontier ANTI-JOIN selected (broadcast, the
         # selected set is the small side), so the budget windows run exactly
@@ -420,59 +478,116 @@ class CrawlEngine:
                 "rank", F.monotonically_increasing_id().cast("long")
             )
         # Broadcast bound: round_cap if set, else the frontier row count
-        # (manifest stats, zero jobs — or the in-memory observation for a
-        # prepared round) PLUS the raw inbox url count — together an upper
-        # bound on this round's selected set (selected ⊆ eligible ⊆
-        # frontier ∪ inbox). At a 10^10-row frontier the bound exceeds
-        # broadcast_max_rows and the hint is withheld (AQE plans from
-        # runtime stats instead).
+        # PLUS the raw inbox url count — together an upper bound on this
+        # round's selected set (selected ⊆ eligible ⊆ frontier ∪ inbox). At
+        # a 10^10-row frontier the bound exceeds broadcast_max_rows and the
+        # hint is withheld (AQE plans from runtime stats instead).
         if cfg.round_cap is not None:
             sel_bound = cfg.round_cap
         else:
             sel_bound = self._frontier_stats()[0] if frontier_n is None else frontier_n
             sel_bound += inbox_n
         bounded = cfg.broadcast_selected and sel_bound <= cfg.broadcast_max_rows
-        n_sel = None
-        if materialize:
-            with self._job(f"r{rnd} prepare: politeness windows + selected cache"):
-                n_sel = selected.count()
-        return {
-            "rnd": rnd,
-            "frontier": frontier,
-            "robots_blocked": robots_blocked,
-            "selected": selected,
-            "selected_ranked": selected_ranked,
-            "rank_cache": rank_cache,
-            "bounded": bounded,
-            "n_sel": n_sel,
-        }
+        return Selection(selected, selected_ranked, rank_cache, bounded)
 
-    def discard_prep(self, prep: dict | None) -> None:
-        """Release a prepared-but-unclaimed round's caches (idle jump, inbox
-        arrival, crawl end)."""
-        if prep is None:
-            return
-        prep["selected"].unpersist()
-        if prep["rank_cache"] is not None:
-            prep["rank_cache"].unpersist()
+    def _inbox_pending(self) -> bool:
+        return self.feeder is not None and bool(self.feeder.pending_files())
 
-    def discard_prefetch(self, pf: dict | None) -> None:
-        """Release an unclaimed full prefetch: wait out its in-flight job,
-        drop its caches, and remove the staged (never-committed) pages
-        delta. Rare path — inbox arrival between launch and claim, or the
-        crawl ending early (an ``until_ancestor`` stop, an error). The
-        max_rounds cutoff never launches one (run_round's ``max_round``)."""
+    @staticmethod
+    def _unpersist(dfs: list[DataFrame]) -> None:
+        for df in dfs:
+            df.unpersist()
+
+    def _launch_prefetch(
+        self, st: RoundState, core_stats: dict, n_admitted: int, max_round: int | None
+    ) -> bool:
+        """Start round rnd+1 on the engine's pipeline pool while round rnd's
+        commit tail drains: its selection over the IN-MEMORY next frontier
+        (core ∪ admitted — no wait for the admitted append or the commit;
+        byte-identical to the committed frontier) and its whole pages stage
+        (fetch-join + parse + staged write). Launched only when round rnd+1 has due work:
+        admitted rows carry exetime == now, and the core write observed the
+        core's min exetime. Never past ``max_round``, never with inbox files
+        pending (their seeds are missing from the prefetched frontier), and
+        only while run() drives the loop: a direct run_round() caller gets
+        strictly synchronous rounds (a prefetch it never claims could race
+        another engine on the same store). Returns whether it launched —
+        this round's caches then belong to the handle."""
+        cfg, rnd = self.cfg, st.rnd
+        core_min = core_stats["min_exetime"]
+        due = n_admitted > 0 or (
+            core_min is not None and core_min <= cfg.t0 + (rnd + 1) * cfg.round_seconds
+        )
+        if not (
+            self._in_run
+            and due
+            and (max_round is None or rnd < max_round)
+            and not self._inbox_pending()
+        ):
+            return False
+        cols = st.frontier.columns
+        frontier = st.core_union.unionByName(st.admitted.select(*cols))
+        # exact |frontier(rnd)|: both parts were counted by their jobs
+        frontier_n = int(core_stats["n"] or 0) + n_admitted
+        corpus = st.corpus
+
+        def job() -> tuple:
+            sel = self._prepare_round(rnd + 1, frontier, frontier_n=frontier_n)
+            try:
+                # pulls the politeness shuffle forward and warms the cache;
+                # the count doubles as the miss fast-path's |selected|
+                with self._job(f"r{rnd + 1} prepare: politeness windows + selected cache"):
+                    sel.n_sel = sel.selected.count()
+                return (sel, *self._run_pages_job(rnd + 1, sel, cols, corpus))
+            except BaseException:
+                self._unpersist(sel.caches())
+                raise
+
+        if self._pipe_pool is None:
+            self._pipe_pool = ThreadPoolExecutor(max_workers=2)
+        self._prefetch = Prefetch(rnd + 1, self._pipe_pool.submit(job), st.caches())
+        return True
+
+    def _claim_prefetch(self, rnd: int) -> tuple | None:
+        """Round ``rnd``'s prefetch result, if one is pending for it and no
+        inbox file has arrived since it launched (its frontier lacks those
+        seeds; they drain inline instead). Any other pending prefetch is
+        discarded first: its staged write would race this round's inline
+        rewrite of the same delta dir. ``result()`` waits out the in-flight
+        pages write — normally the only thing left running, so this IS the
+        round's pages wall. A failed prefetch aborts its staged files and
+        re-raises."""
+        pf = self._prefetch
+        if pf is None:
+            return None
+        if pf.rnd != rnd or self._inbox_pending():
+            self.discard_prefetch()
+            return None
+        self._prefetch = None
+        try:
+            return pf.fut.result()
+        except BaseException:
+            self.store.abort_uncommitted(rnd)
+            raise
+        finally:
+            # the launching round's caches: every prefetch job is done
+            self._unpersist(pf.release)
+
+    def discard_prefetch(self) -> None:
+        """Retire the pending prefetch, if any: wait out its in-flight job,
+        drop its caches and the launching round's, and remove the staged
+        (never-committed) pages delta. Rare path — an inbox arrival between
+        launch and claim, or the crawl ending early (an ``until_ancestor``
+        stop, an error); run() calls it on the way out."""
+        pf, self._prefetch = self._prefetch, None
         if pf is None:
             return
         try:
-            handle = pf["fut"].result()
+            sel = pf.fut.result()[0]
         except Exception:
-            handle = None
-        if handle is not None:
-            self.discard_prep(handle["prep"])
-            for df in handle["release"]:
-                df.unpersist()
-        self.store.abort_uncommitted(pf["rnd"])
+            sel = None  # the failed job released its own selection
+        self._unpersist(pf.release + (sel.caches() if sel is not None else []))
+        self.store.abort_uncommitted(pf.rnd)
 
     def _stage_pages(
         self, rnd: int, frontier_cols: list[str], src: DataFrame
@@ -583,12 +698,7 @@ class CrawlEngine:
         return staged, obs
 
     def _run_pages_job(
-        self,
-        rnd: int,
-        selected_ranked: DataFrame,
-        bounded: bool,
-        frontier_cols: list[str],
-        corpus: DataFrame,
+        self, rnd: int, sel: Selection, frontier_cols: list[str], corpus: DataFrame
     ) -> tuple[Observation, list[str]]:
         """Stage the round's page-level result: ONE heavy job runs
         fetch-join + Arrow parse and writes the hits delta with html
@@ -601,158 +711,98 @@ class CrawlEngine:
             from acrawler_spark.sources.netfetch import build_fetch_http
 
             fetched = build_fetch_http(
-                selected_ranked, frontier_cols, **self.cfg.http_fetch
+                sel.selected_ranked, frontier_cols, **self.cfg.http_fetch
             )
         else:
             fetched = build_fetch_join(
-                selected_ranked, corpus, frontier_cols, self.cfg, bounded
+                sel.selected_ranked, corpus, frontier_cols, self.cfg, sel.bounded
             )
         staged, obs = self._stage_pages(rnd, frontier_cols, fetched)
         with self._job(f"r{rnd} pages: fetch-join + parse + write"):
             self.store.write_delta("pages", rnd, staged)
         return obs, staged.columns
 
-    def run_round(
-        self,
-        rnd: int,
-        corpus: DataFrame,
-        prep: dict | None = None,
-        prefetch: dict | None = None,
-        max_round: int | None = None,
-    ) -> dict:
-        """Run round ``rnd`` and commit it. ``max_round`` is the caller's
-        last round: at it, the commit launches no next-round prefetch or
-        prepare (work that would only be discarded)."""
-        cfg = self.cfg
-        now = cfg.t0 + rnd * cfg.round_seconds
-        wall_start = time.monotonic()
-        timing: dict[str, float] = {}
-        _t = [wall_start]
+    # -- one round: the stages -------------------------------------------------
 
-        def tick(label: str) -> None:
-            nowm = time.monotonic()
-            timing[label] = round(nowm - _t[0], 2)
-            _t[0] = nowm
-
-        # how this round's selection+pages came to be (bench/debug audit):
-        # "prefetch" = claimed a full pipelined round, "prep" = claimed a
-        # prepared selection, "inline" = computed everything in-round
-        timing["mode"] = (
-            "prefetch" if prefetch is not None else ("prep" if prep is not None else "inline")
+    def run_round(self, rnd: int, corpus: DataFrame, max_round: int | None = None) -> dict:
+        """Run round ``rnd`` and commit it: select → fetch/parse →
+        follow/admit/lifecycle → commit. The round claims its own prefetch
+        when the previous round's commit launched one for it (mode
+        "prefetch"); otherwise it computes everything in-round ("inline").
+        ``max_round`` is the caller's last round: at it, the commit
+        launches no next-round prefetch (work that would only be
+        discarded)."""
+        start = time.monotonic()  # a claim's wait is part of the pages stage
+        claimed = self._claim_prefetch(rnd)
+        st = RoundState(
+            start=start,
+            rnd=rnd,
+            now=self.cfg.t0 + rnd * self.cfg.round_seconds,
+            corpus=corpus,
+            frontier=self.store.read_frontier(),
+            seen=self.store.read_appended("seen"),
+            timing={"mode": "inline" if claimed is None else "prefetch"},
         )
+        self._select(st, claimed)
+        self._fetch(st, claimed)
+        self._follow(st)
+        self._commit(st, max_round)
+        return {
+            "round": rnd, **st.counts,
+            "timing": st.timing, "wall_s": round(time.monotonic() - st.start, 3),
+        }
 
-        # a prefetch nobody claimed (direct run_round calls, e.g. tests or
-        # resume drivers) must be retired BEFORE this round runs: its
-        # staged write races an inline rewrite of the same delta dir
-        if self._next_pages is not None and prefetch is not self._next_pages:
-            self.discard_prefetch(self._next_pages)
-            self._next_pages = None
-        if prefetch is not None:
-            self._next_pages = None  # claimed — no longer pending
-
-        frontier = self.store.read_frontier()
-        seen = self.store.read_appended("seen")
-
-        # full prefetch claim: the previous round's pipeline pool already
-        # ran this round's selection AND its pages stage (fetch-join +
-        # parse + staged write). result() waits out the in-flight write —
-        # normally it is the only thing left running, so this IS the
-        # round's pages wall. run() guarantees rnd matches and no inbox
-        # files were pending at claim time.
-        handle = None
-        if prefetch is not None:
-            handle = prefetch["fut"].result()
-            prep = handle["prep"]
-            # the prepared selection was derived from the previous round's
-            # IN-MEMORY frontier plan; this round's commit (frontier
-            # rewrite anti-join, columns) must read the committed files
-            # instead — re-deriving the plan would recompute the prior
-            # round's politeness/admit chain from released caches
-            prep["frontier"] = self.store.read_frontier(rnd - 1)
-            if prep["robots_blocked"] is not None:
-                # rebuild the (lazy, tiny) robots split over the file-backed
-                # frontier for the same reason
-                from acrawler_spark.operators.robots import apply_robots
-
-                _, prep["robots_blocked"] = apply_robots(
-                    prep["frontier"].filter(F.col("exetime") <= F.lit(now)),
-                    self.robots,
-                )
-            # prior round's caches (selected/admitted/rank/seeds) were kept
-            # alive for the prefetch's politeness input — all its jobs are
-            # done now, release them
-            for df in handle["release"]:
-                df.unpersist()
-
-        # between-round seed ingestion (redis feeder analog; at-least-once,
-        # idempotent through the dupefilter — handlers.py:282-293). Skipped
-        # when the round was prepared: run() only hands prep over with an
-        # empty inbox, and files dropped after that drain next round.
-        inbox_files: list[str] = []
-        new_seed_rows = None
-        inbox_n = 0  # raw inbox url count — free at drain, bounds admitted
-        if self.feeder is not None and prep is None:
-            inbox_df, inbox_files, inbox_n = self.feeder.drain(rnd, now)
-            if inbox_df is not None:
-                new_seed_rows = admit_new_candidates(inbox_df, seen, self.bloom).persist()
-                frontier = frontier.unionByName(new_seed_rows.select(*frontier.columns))
-        # a huge external seed drop must not be force-broadcast anywhere:
-        # the hint on new_seed_rows (candidate dedupe below) is proven only
-        # under the same threshold as the selected set
-        inbox_bounded = inbox_n <= cfg.broadcast_max_rows
-
-        if prep is not None:
-            # selection pre-computed by the previous round's commit pool
-            # (read-only: politeness windows ran and `selected` is hot in
-            # cache while the seen chain's tail was still writing) — the
-            # round starts at the fetch join. run() guarantees prep is only
-            # handed over when rnd matches and no inbox files were pending
-            # at claim time; files dropped since then drain next round
-            # (at-least-once, unchanged).
-            frontier = prep["frontier"]
-            robots_blocked = prep["robots_blocked"]
-            selected = prep["selected"]
-            selected_ranked = prep["selected_ranked"]
-            rank_cache = prep["rank_cache"]
-            bounded = prep["bounded"]
-            n_sel_prepared = prep["n_sel"]
+    def _select(self, st: RoundState, claimed: tuple | None) -> None:
+        """Inbox seeds, then the selection (a claimed prefetch already ran
+        it), then the robots split's staged write."""
+        if claimed is not None:
+            # the prefetch was claimed with an empty inbox; files dropped
+            # since then drain next round (at-least-once, unchanged)
+            st.sel = claimed[0]
         else:
-            sel = self._prepare_round(
-                rnd, frontier, inbox_n, frontier_n=None, materialize=False
-            )
-            robots_blocked = sel["robots_blocked"]
-            selected = sel["selected"]
-            selected_ranked = sel["selected_ranked"]
-            rank_cache = sel["rank_cache"]
-            bounded = sel["bounded"]
-            n_sel_prepared = None
-
+            if self.feeder is not None:
+                # between-round seed ingestion (redis feeder analog;
+                # at-least-once, idempotent through the dupefilter —
+                # handlers.py:282-293)
+                inbox_df, st.inbox_files, st.inbox_n = self.feeder.drain(st.rnd, st.now)
+                if inbox_df is not None:
+                    st.new_seed_rows = admit_new_candidates(
+                        inbox_df, st.seen, self.bloom
+                    ).persist()
+                    st.frontier = st.frontier.unionByName(
+                        st.new_seed_rows.select(*st.frontier.columns)
+                    )
+            st.sel = self._prepare_round(st.rnd, st.frontier, st.inbox_n)
         # robots.txt admission (north-rule addition; absent in reference —
         # SURVEY §7). Blocked rows are dropped permanently (they stay seen).
-        # The split is computed (lazily) in _prepare_round; the delta WRITE
-        # is always staged here, inside the round that commits it.
-        robots_blocked_fps = None
-        if robots_blocked is not None:
+        # The split is rebuilt over this round's (file-backed) frontier —
+        # a prefetched selection's plan reads the previous round's released
+        # caches — and its delta is always staged by the round committing it.
+        if self.robots is not None:
+            from acrawler_spark.operators.robots import apply_robots
+
+            _, blocked = apply_robots(
+                st.frontier.filter(F.col("exetime") <= F.lit(st.now)), self.robots
+            )
             self.store.write_delta(
                 "robots_blocked",
-                rnd,
-                robots_blocked.select("url", "url_canon", "fingerprint", "host")
-                .withColumn("round", F.lit(rnd)),
+                st.rnd,
+                blocked.select("url", "url_canon", "fingerprint", "host")
+                .withColumn("round", F.lit(st.rnd)),
             )
-            robots_blocked_fps = self.store.read_delta_one(
-                "robots_blocked", rnd
+            st.robots_blocked_fps = self.store.read_delta_one(
+                "robots_blocked", st.rnd
             ).select("fingerprint")
 
-        if handle is not None:
-            # pages already fetched+parsed+staged by the prefetch chain
-            # (the claim's fut.result() above waited out the write); the
-            # observation carries the round counters as usual
-            obs_pages, staged_cols = handle["obs_pages"], handle["staged_cols"]
+    def _fetch(self, st: RoundState, claimed: tuple | None) -> None:
+        """The pages stage (fetch-join + parse + staged write, or the
+        claimed prefetch's), the corpus misses, and the fetch counters."""
+        cfg, rnd, sel, cols = self.cfg, st.rnd, st.sel, st.frontier.columns
+        if claimed is not None:
+            _, obs_pages, staged_cols = claimed
         else:
-            obs_pages, staged_cols = self._run_pages_job(
-                rnd, selected_ranked, bounded, frontier.columns, corpus
-            )
-        tick("pages_stage")
+            obs_pages, staged_cols = self._run_pages_job(rnd, sel, cols, st.corpus)
+        st.tick("pages_stage")
 
         # misses staged SECOND, against the round's own output: the old
         # in-stage `selected LEFT ANTI corpus[keys]` union branch re-scanned
@@ -766,47 +816,56 @@ class CrawlEngine:
         # zero misses — the whole miss job (fp broadcast build + anti-join
         # stage + delta append, ~1.5-2 s of driver-serial cost per round at
         # any core count) is skipped. The selected count is one tiny scan
-        # of the cache the pages job just materialized (an Observation on
-        # the fetch join's build side would be free, but CollectMetrics
-        # under an AQE broadcast stage doesn't reliably surface its row).
-        # Steady-state rounds of a converged crawl are all hits, so this is
-        # the common case the round loop is sized for.
-        pstats = obs_pages.get
-        if n_sel_prepared is not None:
-            # the prepare materialization already counted selected — free
-            n_sel_exact = n_sel_prepared if cfg.corpus_unique_keys else -1
-        else:
-            with self._job(f"r{rnd} miss check: cached selected count"):
-                n_sel_exact = selected.count() if cfg.corpus_unique_keys else -1
-        if cfg.corpus_unique_keys and int(pstats["n_selected"] or 0) == n_sel_exact:
-            mstats = {"n_selected": 0, "n_ok": 0, "n_failed": 0, "n_defer_user": 0}
-        else:
+        # of the cache the pages job just materialized (free when the
+        # prefetch already counted it; an Observation on the fetch join's
+        # build side would be free, but CollectMetrics under an AQE
+        # broadcast stage doesn't reliably surface its row). Steady-state
+        # rounds of a converged crawl are all hits, so this is the common
+        # case the round loop is sized for.
+        stats = [obs_pages.get]
+        all_hits = False
+        if cfg.corpus_unique_keys:
+            if sel.n_sel is None:
+                with self._job(f"r{rnd} miss check: cached selected count"):
+                    sel.n_sel = sel.selected.count()
+            all_hits = int(stats[0]["n_selected"] or 0) == sel.n_sel
+        if not all_hits:
             hit_fps = self.store.read_delta_one("pages", rnd).select("fingerprint")
             miss_staged, obs_miss = self._stage_pages(
-                rnd,
-                frontier.columns,
-                build_misses(selected_ranked, hit_fps, frontier.columns, bounded),
+                rnd, cols, build_misses(sel.selected_ranked, hit_fps, cols, sel.bounded)
             )
             with self._job(f"r{rnd} misses: anti-join vs written hits + append"):
                 self.store.append_delta(
-                    "pages", rnd,
-                    miss_staged.select(*[F.col(c) for c in staged_cols]),
+                    "pages", rnd, miss_staged.select(*[F.col(c) for c in staged_cols])
                 )
-            mstats = obs_miss.get
-        n_selected = int(pstats["n_selected"] or 0) + int(mstats["n_selected"] or 0)
-        n_ok = int(pstats["n_ok"] or 0) + int(mstats["n_ok"] or 0)
-        n_failed_final = int(pstats["n_failed"] or 0) + int(mstats["n_failed"] or 0)
-        n_defer_user = int(pstats["n_defer_user"] or 0) + int(mstats["n_defer_user"] or 0)
-        n_retries = n_selected - n_ok - n_failed_final - n_defer_user
-        tick("misses_stage")
-        pages = self.store.read_delta_one("pages", rnd)
+            stats.append(obs_miss.get)
+
+        def total(key: str) -> int:
+            return sum(int(s[key] or 0) for s in stats)
+
+        n_selected, n_ok, n_failed = total("n_selected"), total("n_ok"), total("n_failed")
+        st.n_defer_user = total("n_defer_user")
+        st.counts = {
+            "selected": n_selected, "ok": n_ok, "admitted": 0, "deferred": 0,
+            "retried": n_selected - n_ok - n_failed - st.n_defer_user,
+            "failed": n_failed,
+        }
+        st.tick("misses_stage")
+        st.pages = self.store.read_delta_one("pages", rnd)
+
+    def _follow(self, st: RoundState) -> None:
+        """Lazy plans over the staged pages: ItemSpec extractions, followed
+        links admitted against seen, and the next frontier's core — the
+        round-start frontier minus selected (and robots-blocked) rows plus
+        the retry / user-defer / recrawl re-entries."""
+        cfg, rnd, now, pages = self.cfg, st.rnd, st.now, st.pages
+        cols = st.frontier.columns
 
         # items / fetch_log / failed are VIRTUAL — projections of the pages
         # delta served by the store (plans/views.py); nothing to write.
         # Only ItemSpec extractions (per-family ParselItem analogs) produce
         # physical items rows.
         base_items = items_view(pages)
-        spec_items_all = None
         for spec in cfg.item_specs:
             src = base_items.select(
                 "url", "extracted_text", "lang", "depth", "round", "callback_family"
@@ -819,16 +878,14 @@ class CrawlEngine:
                 src = src.filter(F.col("url").rlike(spec.url_pattern))
             spec_items = spec.extract(src).join(
                 src.select("url", "lang", "depth"), "url", "left"
-            )
-            spec_items = spec_items.select(
+            ).select(
                 "url", "family",
                 F.lit(None).cast("string").alias("extracted_text"),
                 "lang", "depth", F.lit(rnd).alias("round"), "content",
             )
-            spec_items_all = (
-                spec_items
-                if spec_items_all is None
-                else spec_items_all.unionByName(spec_items)
+            st.spec_items = (
+                spec_items if st.spec_items is None
+                else st.spec_items.unionByName(spec_items)
             )
 
         # follow links (only when configured — parser.py:86); follow_limit
@@ -850,23 +907,26 @@ class CrawlEngine:
             candidates = candidates_from_links(
                 link_src, rnd, now, cfg.child_priority, cfg.max_depth
             )
-            admitted = admit_new_candidates(candidates, seen, self.bloom)
-            if new_seed_rows is not None:
+            admitted = admit_new_candidates(candidates, st.seen, self.bloom)
+            if st.new_seed_rows is not None:
                 # frontier invariant: at most one row per fingerprint (the
-                # rewrite below is an anti-join on fingerprint). Candidates
-                # admit against the ROUND-START seen snapshot, which
-                # excludes this round's inbox seeds — drop candidates the
-                # inbox already admitted, or both rows would enter the
-                # frontier and the anti-join would later drop the pair.
-                seed_fps = new_seed_rows.select("fingerprint")
+                # rewrite is an anti-join on fingerprint). Candidates admit
+                # against the ROUND-START seen snapshot, which excludes
+                # this round's inbox seeds — drop candidates the inbox
+                # already admitted, or both rows would enter the frontier
+                # and the anti-join would later drop the pair. A huge
+                # external seed drop is broadcast only under the same
+                # threshold as the selected set.
+                seed_fps = st.new_seed_rows.select("fingerprint")
                 admitted = admitted.join(
-                    F.broadcast(seed_fps) if inbox_bounded else seed_fps,
+                    F.broadcast(seed_fps)
+                    if st.inbox_n <= cfg.broadcast_max_rows else seed_fps,
                     "fingerprint",
                     "left_anti",
                 )
-            admitted = admitted.persist()
+            st.admitted = admitted.persist()
         else:
-            admitted = local_frame(self.spark, [], FRONTIER_SCHEMA).persist()
+            st.admitted = local_frame(self.spark, [], FRONTIER_SCHEMA).persist()
 
         # retry branch (crawler.py:98-114): failed & tries_done <= max_tries;
         # ignore_exception rows never retry (task.py:51)
@@ -877,7 +937,7 @@ class CrawlEngine:
                 & (F.col("tries_done") <= cfg.max_tries)
                 & ~F.col("ignore_exception")
             )
-            .select(*frontier.columns)
+            .select(*cols)
             .withColumn("tries", F.col("tries") + 1)
             .withColumn("exetime", F.lit(now))
             .withColumn("dont_filter", F.lit(True))
@@ -887,78 +947,94 @@ class CrawlEngine:
         # kept at the incremented value, uncounted (flag -2)
         deferred_user = (
             pages.filter(F.col("defer_s") > 0)
-            .select(*frontier.columns, "defer_s", "tries_done")
+            .select(*cols, "defer_s", "tries_done")
             .withColumn("tries", F.col("tries_done"))
             .withColumn("exetime", F.lit(now) + F.col("defer_s"))
             .withColumn("dont_filter", F.lit(True))
-            .select(*frontier.columns)
+            .select(*cols)
         )
         # recrawl branch (crawler.py:122-126): success & recrawl>0 re-enqueues
         # with tries=0, exetime=last_crawl+recrawl, dont_filter
         recrawls = (
             pages.filter(F.col("ok") & (F.col("recrawl") > 0))
-            .select(*frontier.columns)
+            .select(*cols)
             .withColumn("tries", F.lit(0))
             .withColumn("exetime", F.lit(now) + F.col("recrawl").cast("double"))
             .withColumn("dont_filter", F.lit(True))
         )
 
-        # -- commit (staged writes, then atomic manifest bump) ----------------
-        # Per-round action budget (VERDICT r1 scaling fix): THREE write
-        # actions in the steady state — pages stage, seen (+Bloom fused),
-        # frontier; AQE runs each query stage of an action as its own Spark
-        # job — and the seen/frontier writes (plus optional spec-items /
-        # lineage) are SUBMITTED CONCURRENTLY from driver threads, so their
-        # per-stage scheduling latencies overlap instead of serializing.
-        # items/fetch_log/failed are virtual projections of the pages delta;
-        # every counter rides a write via observe(); nothing is counted with
-        # a standalone action.
-
         # next frontier CORE = frontier \ selected (\ robots-blocked) +
         # lifecycle re-entries — built once, consumed by (a) the frontier
         # core writer and (b) the next-round prefetch's in-memory frontier
         # (core ∪ admitted), which runs politeness for round rnd+1 without
-        # waiting for the frontier files to land
-        sel_fps = selected.select("fingerprint")
-        remaining = frontier.join(
-            F.broadcast(sel_fps) if bounded else sel_fps, "fingerprint", "left_anti"
+        # waiting for the frontier files to land. A prefetched selection's
+        # plan holds the previous round's core, so anti-joining it would
+        # chain every prefetched round's plan to the one before — and the
+        # politeness union reads its input twice, so the plan would double
+        # per round. The pages delta holds exactly the selected
+        # fingerprints (a hit or a 404 miss row each), so a claimed round
+        # anti-joins those instead.
+        claimed = st.timing["mode"] == "prefetch"
+        sel_fps = (st.pages if claimed else st.sel.selected).select("fingerprint")
+        remaining = st.frontier.join(
+            F.broadcast(sel_fps) if st.sel.bounded else sel_fps,
+            "fingerprint", "left_anti",
         )
-        if robots_blocked_fps is not None:
+        if st.robots_blocked_fps is not None:
             # blocked ⊆ eligible ⊆ frontier ∪ inbox — round_cap does NOT
             # bound it (the cap applies after the robots split), so the
             # hint needs the frontier-count bound even when bounded=True
             # came from round_cap
             robots_bounded = (
-                self._frontier_stats()[0] + inbox_n <= cfg.broadcast_max_rows
+                self._frontier_stats()[0] + st.inbox_n <= cfg.broadcast_max_rows
             )
+            fps = st.robots_blocked_fps
             remaining = remaining.join(
-                F.broadcast(robots_blocked_fps) if robots_bounded
-                else robots_blocked_fps,
-                "fingerprint", "left_anti",
+                F.broadcast(fps) if robots_bounded else fps, "fingerprint", "left_anti"
             )
-        core_union = (
-            remaining.select(*frontier.columns)
-            .unionByName(retries.select(*frontier.columns))
-            .unionByName(recrawls.select(*frontier.columns))
-            .unionByName(deferred_user.select(*frontier.columns))
+        st.core_union = (
+            remaining.select(*cols)
+            .unionByName(retries.select(*cols))
+            .unionByName(recrawls.select(*cols))
+            .unionByName(deferred_user.select(*cols))
         )
 
+    def _commit(self, st: RoundState, max_round: int | None) -> None:
+        """Staged writes, the next-round prefetch, then the atomic manifest
+        bump (its entry carries the round's counters and ``timing``).
+
+        Per-round action budget (VERDICT r1 scaling fix): THREE write
+        actions in the steady state — pages stage, seen (+Bloom fused),
+        frontier; AQE runs each query stage of an action as its own Spark
+        job — and the seen/frontier writes (plus optional spec-items /
+        lineage) are SUBMITTED CONCURRENTLY from driver threads, so their
+        per-stage scheduling latencies overlap instead of serializing.
+        items/fetch_log/failed are virtual projections of the pages delta;
+        every counter rides a write via observe(); nothing is counted with
+        a standalone action."""
+        cfg, rnd, now = self.cfg, st.rnd, st.now
+        cols = st.frontier.columns
+        # admitted is the empty literal when nothing can be admitted
+        has_admitted = bool(cfg.follow_patterns) or st.new_seed_rows is not None
+
+        def _cache_job() -> int:
+            with self._job(f"r{rnd} admitted: admit pipeline + cache"):
+                return st.admitted.count()
+
         def _seen_job() -> int:
-            # seen delta + Bloom maintenance fused into one write job; the
-            # admitted cache materializes here (or in the concurrent
-            # frontier job — RDD cache locking makes that safe) and is
-            # shared. Schedule-time semantics: seen grows in the same
-            # commit that admits the rows (scheduler.py:45-50).
-            if not (cfg.follow_patterns or new_seed_rows is not None):
+            # seen delta + Bloom maintenance fused into one write job over
+            # the hot admitted cache. Schedule-time semantics: seen grows in
+            # the same commit that admits the rows (scheduler.py:45-50).
+            if not has_admitted:
                 return 0
-            new_seen = admitted.select(
+            new_seen = st.admitted.select(
                 "fingerprint",
                 F.lit(rnd).alias("added_round"),
                 F.lit(0).alias("_is_seed"),
             )
-            if new_seed_rows is not None:
+            if st.new_seed_rows is not None:
                 new_seen = new_seen.unionByName(
-                    new_seed_rows.select(
+                    st.new_seed_rows.select(
                         "fingerprint",
                         F.lit(rnd).alias("added_round"),
                         F.lit(1).alias("_is_seed"),
@@ -990,41 +1066,42 @@ class CrawlEngine:
             ), obs
 
         def _frontier_core_job() -> dict:
-            # new frontier = frontier \ selected (\ robots-blocked) +
-            # lifecycle re-entries. The anti-join's right side is the
-            # (cached) selected fingerprints, so the politeness windows are
-            # NOT recomputed and the big frontier scan streams through one
-            # stage. Requires the one-row-per-fingerprint frontier
-            # invariant (held by: schedule-time seen admission + the
-            # inbox-vs-candidates dedupe above). Broadcast is hinted only
-            # under the proven bound (round_cap / frontier_n ≤
-            # broadcast_max_rows); otherwise AQE picks from runtime stats
-            # (an unbounded selected set must not be forced driver-side).
-            # SPLIT COMMIT: this core part touches only the prior frontier,
-            # the (hot) selected cache, and the written pages delta — never
-            # `admitted` — so it runs CONCURRENTLY with the seen job instead
-            # of serializing behind it; the admitted branch appends after
-            # (its cache is materialized by the seen write).
-            new_frontier, obs = _frontier_obs(core_union)
+            # The anti-join's right side is the (cached) selected
+            # fingerprints, so the politeness windows are NOT recomputed and
+            # the big frontier scan streams through one stage. Requires the
+            # one-row-per-fingerprint frontier invariant (held by:
+            # schedule-time seen admission + the inbox-vs-candidates
+            # dedupe). Broadcast is hinted only under the proven bound
+            # (round_cap / frontier_n ≤ broadcast_max_rows); otherwise AQE
+            # picks from runtime stats (an unbounded selected set must not
+            # be forced driver-side). SPLIT COMMIT: this core part touches
+            # only the prior frontier, the (hot) selected cache, and the
+            # written pages delta — never `admitted` — so it runs
+            # CONCURRENTLY with the admitted materialization instead of
+            # serializing behind it; the admitted branch appends after.
+            new_frontier, obs = _frontier_obs(st.core_union)
             with self._job(f"r{rnd} frontier core: anti-join + re-entries write"):
                 self.store.write_frontier(rnd, new_frontier)
             return obs.get
 
         def _frontier_admitted_job() -> dict:
-            if not (cfg.follow_patterns or new_seed_rows is not None):
-                # admitted is the empty literal — nothing to append
+            if not has_admitted:
                 return {"n": 0, "min_exetime": None, "n_due_now": 0}
-            adf, obs = _frontier_obs(admitted.select(*frontier.columns))
+            adf, obs = _frontier_obs(st.admitted.select(*cols))
             with self._job(f"r{rnd} frontier admitted: append"):
                 self.store.append_frontier(rnd, adf)
             return obs.get
+
+        def _items_job() -> None:
+            with self._job(f"r{rnd} items: spec extraction write"):
+                self.store.write_delta("items", rnd, st.spec_items)
 
         def _lineage_job() -> None:
             # per-partition lineage (north rule) — gated: observability,
             # not crawl state. Metrics rows live in the commit manifest and
             # are materialized once per crawl by flush_metrics().
             lineage = (
-                fetch_log_view(pages)
+                fetch_log_view(st.pages)
                 .groupBy(F.spark_partition_id().alias("partition_id"))
                 .agg(
                     F.count("*").alias("n_rows"),
@@ -1036,8 +1113,6 @@ class CrawlEngine:
             with self._job(f"r{rnd} lineage: partition rollup write"):
                 self.store.write_delta("lineage", rnd, lineage)
 
-        from concurrent.futures import ThreadPoolExecutor
-
         # The admitted cache must be materialized by exactly ONE job before
         # any second consumer touches it: submitting two consumers with a
         # cold cache makes every task of one convoy on the other's
@@ -1045,171 +1120,68 @@ class CrawlEngine:
         # partitions (event-log evidence at local[16], bench round 1: two
         # identical 32-task stages — candidates Window + Bloom MapInPandas
         # + Union lineage — 448 task-seconds of run time against 49 CPU-
-        # seconds, ~90% lock-wait). The materializing job is the seen-delta
-        # write itself (it consumes admitted at full parallelism below the
-        # bucket repartition, so the cache fills exactly where a standalone
-        # count() would have filled it) — one serial barrier job less per
-        # round than the previous count()-then-write ordering; the other
-        # writers then race only on cheap cache reads.
-        tick("commit_dag_build")  # py4j plan construction since misses tick
+        # seconds, ~90% lock-wait). items/lineage/frontier-core read only
+        # the pages delta, the selected cache, and the prior frontier (all
+        # hot/materialized by the fetch phase) — they never touch admitted,
+        # so they run beside the materializer; the seen write and the
+        # admitted append then consume a hot cache (the append must also
+        # follow the core overwrite, which clears the dir it lands in).
+        st.tick("commit_dag_build")  # py4j plan construction since misses tick
         with ThreadPoolExecutor(max_workers=6) as pool:
-            # ONE job materializes the admitted cache (the expensive admit
-            # pipeline: candidates agg + Bloom probe + anti-join); the seen
-            # write and the frontier append then consume a hot cache.
-            # items/lineage/frontier-core read only the pages delta, the
-            # selected cache, and the prior frontier (all hot/materialized
-            # by the fetch phase) — they never touch admitted, so they run
-            # beside the materializer; the admitted append (second admitted
-            # consumer) must also follow the core overwrite (overwrite
-            # clears the frontier dir the append lands in).
-            def _cache_job() -> int:
-                with self._job(f"r{rnd} admitted: admit pipeline + cache"):
-                    return admitted.count()
-
             fut_cache = pool.submit(_cache_job)
             fut_fcore = pool.submit(_frontier_core_job)
             extras = []
-            if spec_items_all is not None:
-                def _items_job():
-                    with self._job(f"r{rnd} items: spec extraction write"):
-                        self.store.write_delta("items", rnd, spec_items_all)
+            if st.spec_items is not None:
                 extras.append(pool.submit(_items_job))
             if cfg.detailed_metrics:
                 extras.append(pool.submit(_lineage_job))
             n_adm_cached = fut_cache.result()
             fut_seen = pool.submit(_seen_job)  # hot cache: bloom + write tail
-
-            # FULL next-round prefetch: admitted rows carry exetime == now,
-            # so n_adm_cached > 0 proves round rnd+1 has due work — run its
-            # whole selection (politeness) AND its pages stage (fetch-join
-            # + parse + staged write) on the engine-level pipeline pool,
-            # overlapping this round's commit tail and the loop bookkeeping.
-            # The politeness input is the IN-MEMORY core ∪ admitted plan
-            # (cached inputs; no wait for the frontier files), byte-
-            # identical to the file-backed plan. |selected(rnd+1)| ≤
-            # |frontier(rnd)| ≤ prior_frontier_n + n_selected (re-entries:
-            # each selected row spawns at most one) + n_adm_cached — the
-            # broadcast bound stays proven. This round's caches transfer to
-            # the handle and are released when the next round claims it.
-            # gated on the engine's own run() loop driving: a direct
-            # run_round() caller (tests, external drivers) gets strictly
-            # synchronous rounds — a prefetch it never claims could race
-            # another engine instance on the same store (staged-dir
-            # delete/overwrite under an in-flight write)
-            has_next = max_round is None or rnd < max_round
-            if (
-                self._in_run
-                and has_next
-                and n_adm_cached > 0
-                and not (self.feeder is not None and self.feeder.pending_files())
-            ):
-                next_frontier_mem = core_union.unionByName(
-                    admitted.select(*frontier.columns)
-                )
-                prior_n, _ = self._frontier_stats()
-                bound_next = prior_n + n_selected + n_adm_cached
-                release = [selected, admitted]
-                if rank_cache is not None:
-                    release.append(rank_cache)
-                if new_seed_rows is not None:
-                    release.append(new_seed_rows)
-                fcols = list(frontier.columns)
-
-                def _prefetch_job() -> dict:
-                    p = self._prepare_round(
-                        rnd + 1, next_frontier_mem, 0, bound_next, True
-                    )
-                    obs2, cols2 = self._run_pages_job(
-                        rnd + 1, p["selected_ranked"], p["bounded"], fcols, corpus
-                    )
-                    return {
-                        "prep": p,
-                        "obs_pages": obs2,
-                        "staged_cols": cols2,
-                        "release": release,
-                    }
-
-                if self._pipe_pool is None:
-                    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-                    self._pipe_pool = _TPE(max_workers=2)
-                self._next_pages = {
-                    "rnd": rnd + 1,
-                    "fut": self._pipe_pool.submit(_prefetch_job),
-                }
-            fstats_core = fut_fcore.result()
-            fstats_adm = _frontier_admitted_job()
-            fstats = {
-                "n": int(fstats_core["n"] or 0) + int(fstats_adm["n"] or 0),
-                "min_exetime": min(
-                    (x for x in (fstats_core["min_exetime"],
-                                 fstats_adm["min_exetime"]) if x is not None),
-                    default=None,
-                ),
-                "n_due_now": int(fstats_core["n_due_now"] or 0)
-                + int(fstats_adm["n_due_now"] or 0),
-            }
-            # frontier files are complete here — PREPARE the next round
-            # (read-only: politeness windows + selected cache) while the
-            # seen chain's tail and the extras drain. run() claims or
-            # discards the handle; a crash loses only cached work.
-            fut_prep = None
-            now_next = cfg.t0 + (rnd + 1) * cfg.round_seconds
-            if (
-                self._next_pages is None  # full prefetch already covers it
-                and has_next
-                and fstats["n"] > 0
-                and fstats["min_exetime"] is not None
-                and fstats["min_exetime"] <= now_next
-                and not (self.feeder is not None and self.feeder.pending_files())
-            ):
-                fut_prep = pool.submit(
-                    self._prepare_round, rnd + 1, None, 0, fstats["n"], True
-                )
+            core = fut_fcore.result()
+            # both parts of the next frontier are counted: round rnd+1's
+            # prefetch overlaps the admitted append, the seen tail and the
+            # extras
+            launched = self._launch_prefetch(st, core, n_adm_cached, max_round)
+            adm = _frontier_admitted_job()
             n_admitted = fut_seen.result()
             for f in extras:
                 f.result()
-            self._next_prep = fut_prep.result() if fut_prep is not None else None
+        fstats = {
+            "n": int(core["n"] or 0) + int(adm["n"] or 0),
+            "min_exetime": min(
+                (x for x in (core["min_exetime"], adm["min_exetime"]) if x is not None),
+                default=None,
+            ),
+        }
         # rows still due right now = politeness-deferred + retries + admitted
         # (all three carry exetime == now; recrawls, user-deferred and
         # ineligible rows are strictly future). Reported "deferred" folds in
         # user defers — both are counter flag -2 in the reference.
-        n_deferred = (
-            int(fstats["n_due_now"] or 0) - n_retries - n_admitted + n_defer_user
+        n_due_now = int(core["n_due_now"] or 0) + int(adm["n_due_now"] or 0)
+        st.counts["admitted"] = n_admitted
+        st.counts["deferred"] = (
+            n_due_now - st.counts["retried"] - n_admitted + st.n_defer_user
         )
-        tick("commit_writes")
+        st.tick("commit_writes")
 
         self.store.commit_round(
             rnd,
-            {"selected": n_selected, "ok": n_ok, "admitted": n_admitted,
-             "deferred": n_deferred, "retried": n_retries, "failed": n_failed_final,
-             "wall_ms": int((time.monotonic() - wall_start) * 1000),
-             "frontier_n": int(fstats["n"] or 0),
-             "frontier_min_exetime": fstats["min_exetime"]},
+            {**st.counts,
+             "wall_ms": int((time.monotonic() - st.start) * 1000),
+             "frontier_n": fstats["n"],
+             "frontier_min_exetime": fstats["min_exetime"],
+             "timing": st.timing},
         )
-
-        if inbox_files:
-            self.feeder.consume(inbox_files)  # post-commit: at-least-once
+        if st.inbox_files:
+            self.feeder.consume(st.inbox_files)  # post-commit: at-least-once
         # bound the seen table's delta-file count over long crawls
         # (Iceberg rewrite_data_files analog)
         if self.store.delta_count("seen") >= cfg.seen_compact_deltas:
             self.store.compact("seen")
-        if self._next_pages is None:
-            for df in (selected, admitted):
-                df.unpersist()
-            if rank_cache is not None:
-                rank_cache.unpersist()
-            if new_seed_rows is not None:
-                new_seed_rows.unpersist()
-        # else: ownership transferred to the prefetch handle's `release`
-        # list — the in-flight politeness/pages chain still reads these
-        # caches; the claiming (or discarding) side unpersists them
-        return {
-            "round": rnd, "selected": n_selected, "ok": n_ok,
-            "admitted": n_admitted, "deferred": n_deferred,
-            "retried": n_retries, "failed": n_failed_final,
-            "timing": timing, "wall_s": round(time.monotonic() - wall_start, 3),
-        }
+        if not launched:
+            # else the prefetch handle owns them: its in-flight politeness/
+            # pages chain still reads these caches
+            self._unpersist(st.caches())
 
     # -- loop ------------------------------------------------------------------
 
@@ -1269,7 +1241,13 @@ class CrawlEngine:
         one query. The check is one tiny filtered count per round, only in
         this mode (never in the hot path). A group containing ``recrawl``
         rows never completes — by design, matching the reference counter
-        (a recrawl re-enqueue re-increments its group)."""
+        (a recrawl re-enqueue re-increments its group).
+
+        Rounds are software-pipelined: a round whose successor has due work
+        launches that round's prefetch (selection + pages stage) from its
+        commit, and the successor's run_round claims it. A prefetch still
+        pending when the loop ends (an ``until_ancestor`` stop, an error)
+        is discarded on the way out."""
         import math
 
         cfg = self.cfg
@@ -1284,41 +1262,20 @@ class CrawlEngine:
             self.store.abort_uncommitted(self.store.last_round + 2)
         history = []
         rnd = self.store.last_round + 1
-        prep = None
-        pf = None
         self._in_run = True
         try:
             while rnd <= max_rounds:
                 now = cfg.t0 + rnd * cfg.round_seconds
                 n, min_exetime = self._frontier_stats()
-                has_inbox = bool(self.feeder and self.feeder.pending_files())
+                has_inbox = self._inbox_pending()
                 if n == 0 and not has_inbox:
                     break  # crawl finished (counter.join() == 0, crawler.py:706-724)
                 if n > 0 and min_exetime is not None and min_exetime > now and not has_inbox:
                     # jump to the first round with a due row (idle ticks are free)
-                    self.discard_prefetch(pf)
-                    pf = None
-                    self.discard_prep(prep)
-                    prep = None
                     due_round = math.ceil((min_exetime - cfg.t0) / cfg.round_seconds)
                     rnd = max(rnd + 1, due_round)
                     continue
-                if pf is not None and (pf["rnd"] != rnd or has_inbox):
-                    # inbox files arrived after the prefetch launched (its
-                    # frontier lacks the seeds) or the loop moved — retire it
-                    # and recompute inline
-                    self.discard_prefetch(pf)
-                    pf = None
-                if prep is not None and (prep["rnd"] != rnd or has_inbox):
-                    # inbox files arrived after the prepare (its frontier lacks
-                    # the seeds) or the loop moved — recompute inline
-                    self.discard_prep(prep)
-                    prep = None
-                history.append(
-                    self.run_round(rnd, corpus, prep=prep, prefetch=pf, max_round=max_rounds)
-                )
-                prep, self._next_prep = self._next_prep, None
-                pf, self._next_pages = self._next_pages, None
+                history.append(self.run_round(rnd, corpus, max_round=max_rounds))
                 rnd += 1
                 if until_ancestor is not None:
                     left = (
@@ -1331,14 +1288,7 @@ class CrawlEngine:
                         break  # group unfinished count == 0 (web.py wait)
         finally:
             self._in_run = False
-            self.discard_prefetch(pf)
-            self.discard_prep(prep)
-            pf = self._next_pages
-            self._next_pages = None
-            self.discard_prefetch(pf)
-            prep = self._next_prep
-            self._next_prep = None
-            self.discard_prep(prep)
+            self.discard_prefetch()
         self.flush_metrics()
         # position 3 = on_close (middleware.py:129-137): sink flush hooks;
         # called with the committed store (not a row DataFrame)

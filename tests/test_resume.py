@@ -43,6 +43,7 @@ def test_kill_and_resume_identical(spark, tmp_path):
     # simulate a crash mid-round-3: stage some files without committing
     e1.store.write_delta("items", 3, s_part.read_appended("items").limit(1))
     del e1
+    entries_before = s_part.read_manifest()["rounds"]
 
     s_resume = CheckpointStore(str(tmp_path / "part"), spark)
     assert s_resume.last_round == 2
@@ -50,6 +51,22 @@ def test_kill_and_resume_identical(spark, tmp_path):
     e2.run(corpus)
 
     assert _final_state(s_resume) == _final_state(s_full)
+
+    # every round's manifest entry carries its round profile (stage walls
+    # and mode), the pre-crash rounds' entries survive the resume, and the
+    # stage walls fit inside the round's wall
+    entries = s_resume.read_manifest()["rounds"]
+    assert s_resume.last_round > 2
+    for rnd in ("1", "2"):
+        assert entries[rnd] == entries_before[rnd]
+    for rnd in range(1, s_resume.last_round + 1):
+        timing = entries[str(rnd)]["timing"]
+        assert timing["mode"] in ("inline", "prefetch"), timing
+        walls = sum(
+            timing[k]
+            for k in ("pages_stage", "misses_stage", "commit_dag_build", "commit_writes")
+        )
+        assert walls <= entries[str(rnd)]["wall_ms"] / 1000 + 0.05, (rnd, timing)
 
 
 def test_bloom_sidecar_survives_resume(spark, tmp_path):

@@ -365,12 +365,12 @@ def _record_job_labels(engine) -> list[str]:
     return labels
 
 
-def test_prefetch_discard_at_max_rounds_leaves_no_staged_files(spark, tmp_path):
+def test_max_rounds_computes_no_round_past_cutoff(spark, tmp_path):
     """A max_rounds cutoff mid-growth computes nothing past the cutoff: no
-    round-2 job is submitted (neither the full prefetch nor the prepare
-    starts), no round-2 delta is staged, the manifest ends at the cutoff
-    round, and a fresh engine resuming on the same store converges to
-    exactly the uninterrupted run's final state."""
+    round-2 job is submitted (no prefetch starts), no round-2 delta is
+    staged, the manifest ends at the cutoff round, and a fresh engine
+    resuming on the same store converges to exactly the uninterrupted
+    run's final state."""
     import os
 
     from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
@@ -432,10 +432,60 @@ def test_prefetch_discard_at_crawl_end_leaves_no_staged_files(spark, tmp_path):
     ), "discarded prefetch left staged files"
 
 
-def test_pipelined_rounds_report_mode(spark, tmp_path):
-    """run() pipelines steady rounds: with follow patterns and a multi-round
-    corpus, at least one round after the first must have been claimed from
-    the prefetch (mode == 'prefetch'), and round 1 is always inline."""
+def _no_follow_crawl(spark, tmp_path):
+    """A crawl that never admits a link: every fixture page plus one dead
+    url per host is a seed, and a per-host budget of 3 spreads them over
+    rounds, so every round after the first is fed only by politeness-
+    deferred seeds and 404 retries."""
+    from acrawler_spark.sources.corpus import build_fixture_pages, fixture_corpus_df
+    from tests.oracle import OracleCrawl
+
+    pages = build_fixture_pages(n_hosts=2, depth=2, fanout=3)
+    seeds = [r["url"] for r in pages] + [f"http://site{h}.test/gone" for h in range(2)]
+    cfg = CrawlConfig(seeds=seeds, max_requests_per_host=3, bloom_bits=1 << 14)
+    store = CheckpointStore(str(tmp_path / "s"), spark)
+    history = CrawlEngine(spark, cfg, store).run(
+        fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3)
+    )
+    expected = OracleCrawl(
+        pages, seeds, [], max_tries=cfg.max_tries,
+        uniform_budget=cfg.effective_host_budget(), t0=cfg.t0,
+        round_seconds=cfg.round_seconds,
+    ).run(max_rounds=cfg.max_rounds)
+    return store, history, expected
+
+
+@pytest.mark.parametrize("crawl", ["follow", "no_follow"])
+def test_pipelined_rounds_report_mode(spark, tmp_path, crawl):
+    """run() pipelines every round after the first: the previous round's
+    commit prefetched it (mode == 'prefetch'), whether that round admitted
+    links (``follow``) or only left politeness-deferred seeds and retries
+    due (``no_follow``). Round 1 is always inline, and both crawls equal
+    the oracle."""
+    from tests.test_engine_e2e import assert_match, run_both
+
+    if crawl == "follow":
+        _, store, history, expected, _ = run_both(
+            spark, tmp_path, n_hosts=2, depth=2, fanout=3
+        )
+    else:
+        store, history, expected = _no_follow_crawl(spark, tmp_path)
+    modes = [h["timing"]["mode"] for h in history]
+    assert modes[0] == "inline"
+    assert len(modes) >= 3 and all(m == "prefetch" for m in modes[1:]), modes
+    assert_match(spark, store, history, expected)
+
+
+def test_failed_prefetch_releases_caches_and_staged_files(spark, tmp_path):
+    """A prefetch whose pages job fails leaves nothing behind. Round 2's
+    pages job stages its delta and then fails, only inside the prefetch
+    round 1's commit launched: run() raises, no round-2 pages delta is
+    left, the manifest ends at round 1, and every DataFrame the crawl
+    cached (the launching round's caches handed to the prefetch, and the
+    prefetch's own selection) is unpersisted."""
+    import os
+    import threading
+
     from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
 
     corpus = fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3)
@@ -443,10 +493,26 @@ def test_pipelined_rounds_report_mode(spark, tmp_path):
         seeds=seed_urls(2), follow_patterns=[r"site\d+\.test"], bloom_bits=1 << 14
     )
     store = CheckpointStore(str(tmp_path / "s"), spark)
-    history = CrawlEngine(spark, cfg, store).run(corpus)
-    modes = [h["timing"]["mode"] for h in history]
-    assert modes[0] == "inline"
-    assert len(modes) >= 2 and "prefetch" in modes[1:], modes
+    e = CrawlEngine(spark, cfg, store)
+    pages_job = e._run_pages_job
+
+    def failing_in_prefetch(rnd, *args):
+        out = pages_job(rnd, *args)
+        if rnd == 2 and threading.current_thread() is not threading.main_thread():
+            raise RuntimeError("injected prefetch failure")
+        return out
+
+    e._run_pages_job = failing_in_prefetch
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="injected prefetch failure"):
+        e.run(corpus)
+    assert store.last_round == 1
+    assert not os.path.exists(
+        os.path.join(str(tmp_path / "s"), "pages", "delta_round=2")
+    ), "failed prefetch left staged files"
+    leaked = set(jsc.getPersistentRDDs().keys()) - cached_before
+    assert not leaked, f"{len(leaked)} cached RDDs outlived the failed crawl"
 
 
 def test_exact_substring_dedup_windows(spark, tmp_path):
