@@ -32,14 +32,8 @@ def get_spark(
         # (url-hash range partitions); locally it matches core count.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime coalesce + skew-join split — hot-domain fetch joins
-        # are exactly the skew case AQE re-plans. ACRAWLER_AQE=0 disables
-        # (AQE inserts a driver-side re-plan barrier per shuffle stage;
-        # for latency-bound many-small-job rounds that barrier can cost
-        # more than the re-plan saves — measured per-workload).
-        .config(
-            "spark.sql.adaptive.enabled",
-            "false" if os.environ.get("ACRAWLER_AQE") == "0" else "true",
-        )
+        # are exactly the skew case AQE re-plans.
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -75,50 +69,28 @@ def get_spark(
         # candidate rows cross the Python boundary in ~115k batches per
         # steady round — per-batch overhead was ~half the commit phase's
         # task time at 16 cores.
-        # Cap value: 1 MiB (was 256 KiB). Still 4x under the 4 MB socket
-        # buffer, so the liveness bound holds (a pending 1 MiB input write
-        # completes whenever output backs up by < 3 MB, and outputs are
-        # sliced by the same byte cap). The larger slices quarter the
-        # batch-crossing count of html-heavy stages; interleaved A/B of
-        # the fetch-parse probe at local[16] measured +5-14% pages/s
-        # (scripts/probe_ab.py), with the task-blocked share of the pages
-        # stage (run time >> CPU time in the event log) the direct cost.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("ACRAWLER_ARROW_BATCH", "8192"),
-        )
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("ACRAWLER_ARROW_MAX_BYTES", str(1024 * 1024)),
-        )
+        # Cap value: 1 MiB. Still 4x under the 4 MB socket buffer, so the
+        # liveness bound holds (a pending 1 MiB input write completes
+        # whenever output backs up by < 3 MB, and outputs are sliced by the
+        # same byte cap), while the larger slices quarter the
+        # batch-crossing count of html-heavy stages.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(1024 * 1024))
         # Speculation: ON for cluster masters (straggler re-launch is the
         # standard guard there) but OFF in local mode — a speculative copy
-        # shares the one machine (duplicated tail-task CPU, measured ~13%
-        # of the pages stage at 16 threads), and when the socket wedge
-        # above was captured live under local[16], NO speculative copy had
-        # been launched for the stuck task; the bench's per-rep subprocess
-        # timeout is the guard that actually fires. ACRAWLER_SPECULATION
-        # overrides either default.
-        .config(
-            "spark.speculation",
-            os.environ.get(
-                "ACRAWLER_SPECULATION",
-                "false" if master.startswith("local") else "true",
-            ),
-        )
+        # shares the one machine (duplicated tail-task CPU), and when the
+        # socket wedge above was captured live under local[16], NO
+        # speculative copy had been launched for the stuck task.
+        .config("spark.speculation", "false" if master.startswith("local") else "true")
         .config("spark.speculation.interval", "5s")
         .config("spark.speculation.multiplier", "4")
         .config("spark.speculation.quantile", "0.9")
         # parquet vectorized-reader batch: default 4096 rows x ~100 KB html
         # = ~400 MB of decompressed column batch PER TASK — at 32 concurrent
         # tasks that alone fills a mid-size heap and GC pauses invert the
-        # core-count scaling (r2 bench: local[32] slower than local[8], with
-        # driver-internal RPC timeouts = multi-second GC pauses). 512 rows
-        # bounds it at ~50 MB/task while keeping vectorization.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("ACRAWLER_READER_BATCH", "512"),
-        )
+        # core-count scaling. 512 rows bounds it at ~50 MB/task while
+        # keeping vectorization.
+        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("ACRAWLER_DRIVER_MEM", "8g"))
     )

@@ -804,7 +804,7 @@ def q_dedup_embedding_pairs(
     # 3 small ints) feed BOTH sides of the band self-join, and the join's
     # pushed-down isnotnull filters additionally make the optimizer
     # duplicate the Python stage per side (guide §4.4) — without the
-    # checkpoint the Arrow bucket pass ran FOUR times (plans/r06/
+    # checkpoint the Arrow bucket pass ran FOUR times (history/plans/r06/
     # dedup_embedding_pairs_scale_after.txt nodes 3/7/13/17); with it the
     # embeddings cross the Python boundary once
     buckets = (

@@ -1,7 +1,7 @@
-"""Dump `.explain("formatted")` evidence for the engine's key plans into
-PLANS.md — pushdown, codegen spans, join strategies, window shapes.
+"""Print `.explain("formatted")` evidence for the engine's key plans as
+markdown on stdout — pushdown, codegen spans, join strategies, window shapes.
 
-Usage: python scripts/audit_plans.py
+Usage: python scripts/audit_plans.py 2>/dev/null > plans.md
 """
 
 from __future__ import annotations
@@ -111,9 +111,7 @@ def main() -> None:
     for title, df in sections:
         out += [f"## {title}", "", "```", plan_of(df).strip(), "```", ""]
 
-    with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
+    print("\n".join(out))
 
 
 if __name__ == "__main__":
