@@ -16,6 +16,8 @@ CrawlEngine:
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 
 from acrawler_spark.operators.items import FieldRule, ItemSpec
@@ -86,8 +88,9 @@ class Crawl:
         return self
 
     def config(self, **kwargs) -> "Crawl":
-        for k, v in kwargs.items():
-            setattr(self._cfg, k, v)
+        """Set CrawlConfig fields by name; an unknown name (a typo, or a
+        removed field) raises TypeError instead of being silently kept."""
+        self._cfg = dataclasses.replace(self._cfg, **kwargs)
         return self
 
     def http_transport(self, timeout_s: float = 10.0, delay_s: float = 0.0,

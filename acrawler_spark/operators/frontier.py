@@ -68,7 +68,6 @@ def seeds_frontier(
     spark: SparkSession,
     seeds: list,
     t0: float,
-    priority: int = 0,
     recrawl: int = 0,
     family: str = "Request",
 ) -> DataFrame:
@@ -90,7 +89,7 @@ def seeds_frontier(
         rows.append(
             (
                 s["url"], i, s.get("method", "GET"),
-                int(s.get("priority", priority)), int(s.get("recrawl", recrawl)),
+                int(s.get("priority", 0)), int(s.get("recrawl", recrawl)),
                 s.get("status_allowed"), s.get("family", family),
                 # a seed's callback family defaults to its own family (the
                 # spider parse the reference would bind, crawler.py:295-302)
@@ -127,7 +126,6 @@ def candidates_from_links(
     parsed: DataFrame,
     rnd: int,
     now: float,
-    child_priority: int = 0,
     max_depth: int | None = None,
 ) -> DataFrame:
     """Explode parsed pages' out-links into frontier candidate rows.
@@ -136,7 +134,7 @@ def candidates_from_links(
     callback_family
     (the page's per-round schedule rank — discovery order comes from
     (rank, link position), making within-round dedup deterministic,
-    SURVEY §7). Child priority defaults to 0 — a followed link is a fresh
+    SURVEY §7). Child priority is 0 — a followed link is a fresh
     ``Request(link)`` with default priority in the reference
     (parser.py:97), not the parent's."""
     c = (
@@ -160,7 +158,7 @@ def candidates_from_links(
         "fingerprint",
         "method",
         "host",
-        F.lit(child_priority).cast("int").alias("priority"),
+        F.lit(0).alias("priority"),
         F.lit(float(now)).alias("exetime"),
         F.lit(0).alias("tries"),
         F.lit(0).cast("long").alias("recrawl"),

@@ -17,7 +17,7 @@ Reference semantics (counter.py:70-109):
 Scale: Window.partitionBy(host) alone funnels a hot domain into one task
 (SURVEY §7 hot-host skew). Two-phase top-k fixes it: rows are first ranked
 within (host, salt) — any row in a host's true top-k is also in its salt's
-top-k — survivors (≤ salt_n·budget per host) are re-ranked within host.
+top-k — survivors (≤ SALT_N·budget per host) are re-ranked within host.
 Unlimited hosts skip ranking entirely (no shuffle for them).
 """
 
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 UNLIMITED = 1 << 30
+SALT_N = 4  # phase-1 sub-partitions per limited host
 
 def rank_keys():
     """The frontier total order (== score DESC + deterministic tie-break)."""
@@ -56,7 +57,7 @@ def budget_col(host, uniform: int, special: dict[str, int]):
     return F.coalesce(expr, uniform_budget)
 
 
-def global_schedule_rank(df: DataFrame, n_parts: int = 0) -> tuple[DataFrame, DataFrame]:
+def global_schedule_rank(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Exact global schedule rank (1-based, frontier total order) without a
     single-partition Window over the data: range-partition on the sort
     keys, row_number within each range, add per-range cumulative offsets.
@@ -78,7 +79,7 @@ def global_schedule_rank(df: DataFrame, n_parts: int = 0) -> tuple[DataFrame, Da
     frontier overflows int).
     """
     keys = rank_keys()
-    n_parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     d = (
         df.repartitionByRange(n_parts, *keys)
         .withColumn("_pid", F.spark_partition_id())
@@ -102,15 +103,14 @@ def apply_host_budgets(
     eligible: DataFrame,
     uniform: int = 0,
     special: dict[str, int] | None = None,
-    salt_n: int = 4,
     delay_budgets: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split eligible frontier rows into (selected, deferred) per budgets.
-
-    Returns both sides with the original frontier columns (plus ``budget``
-    dropped). Deferred rows keep their exetime — they were already due and
-    simply wait for the next round (reference: ReScheduleError with the
-    politeness counter exhausted, counter.py:86,94).
+) -> DataFrame:
+    """The eligible frontier rows selected under the per-host budgets, with
+    the original frontier columns. The rest (deferred) are not built here:
+    they keep their exetime and simply wait in the frontier for the next
+    round (reference: ReScheduleError with the politeness counter
+    exhausted, counter.py:86,94) — the engine's frontier rewrite is
+    frontier ANTI-JOIN selected.
 
     ``delay_budgets`` is an optional tiny (host, delay_budget) table —
     robots.txt Crawl-delay converted to a per-round cap
@@ -146,23 +146,19 @@ def apply_host_budgets(
 
     if not special and uniform <= 0 and delay_budgets is None:
         # fast path: nobody is limited — no shuffle at all
-        return eligible, eligible.limit(0)
+        return eligible
 
     # phase 1: rank inside (host, salt) — bounds any single partition's work
-    salted = limited.withColumn("salt", F.pmod(F.xxhash64("fingerprint"), F.lit(salt_n)))
+    salted = limited.withColumn("salt", F.pmod(F.xxhash64("fingerprint"), F.lit(SALT_N)))
     w1 = Window.partitionBy("host", "salt").orderBy(*rank_keys())
     survivors = (
         salted.withColumn("rn1", F.row_number().over(w1))
         .filter(F.col("rn1") <= F.col("budget"))
         .drop("rn1", "salt")
     )
-    # phase 2: exact top-budget within host over the ≤ salt_n·budget survivors
+    # phase 2: exact top-budget within host over the ≤ SALT_N·budget survivors
     w2 = Window.partitionBy("host").orderBy(*rank_keys())
     ranked = survivors.withColumn("rn2", F.row_number().over(w2))
     selected_limited = ranked.filter(F.col("rn2") <= F.col("budget")).select(*cols)
 
-    selected = unlimited.unionByName(selected_limited)
-    deferred = limited.select(*cols).join(
-        selected_limited.select("fingerprint"), "fingerprint", "left_anti"
-    ).select(*cols)
-    return selected, deferred
+    return unlimited.unionByName(selected_limited)

@@ -71,8 +71,6 @@ class CrawlConfig:
     round_cap: int | None = None  # global per-round fetch cap (MAX_REQUESTS quantized)
     status_allowed: list[int] | None = None  # None => only 200 ok; [] => all ok (http.py:270-281)
     links_to_abs: bool = True
-    child_priority: int = 0
-    seed_priority: int = 0
     seed_recrawl: int = 0  # task.recrawl for seeds (crawler.py:122-126)
     max_depth: int | None = None
     max_rounds: int = 1000
@@ -80,8 +78,7 @@ class CrawlConfig:
     use_bloom: bool = True
     bloom_buckets: int = 16
     bloom_bits: int = 1 << 20
-    record_rank: bool = True  # per-round global rank in fetch_log (order-parity tests)
-    detailed_metrics: bool = True  # count deferred rows per round (extra job)
+    detailed_metrics: bool = True  # write the per-round lineage delta (one extra write job)
     seeds_inbox: str | None = None  # drop-dir seed ingestion (redis feeder analog)
     robots_rules: dict | None = None  # {host: {"disallow": [...], "crawl_delay": s}}
     # corpus bucket layout (Iceberg bucket(url) analog): when set and the
@@ -124,16 +121,6 @@ class CrawlConfig:
     # — family-matched, priority-descending handler stages (middleware.py:70-186)
     handlers: dict = field(default_factory=dict)
     seen_compact_deltas: int = 16  # compact seen when this many deltas accrue
-    # Contract: the corpus is a keyed resource table — at most ONE row per
-    # (url[, method]), the shape of a fetch (one response per request,
-    # http.py:258-281). Under it, |hit rows| == |selected| proves the round
-    # had zero corpus misses, and the miss job (hit-fp broadcast + anti-join
-    # + delta append — fixed driver-serial cost per round) is skipped
-    # entirely; the counts ride jobs that already run. Set False for corpora
-    # with duplicate keys (every selected key then fans out into multiple
-    # page rows AND the equality test could mask a miss) — the anti-join
-    # miss path then runs every round.
-    corpus_unique_keys: bool = True
 
     def effective_host_budget(self) -> int:
         """Fold DOWNLOAD_DELAY into the per-host round budget: with delay d,
@@ -157,6 +144,14 @@ def build_fetch_join(
     request method (http.py:100, fingerprint http.py:142): a corpus with a
     `method` column joins on (url, method); otherwise its rows are GET
     resources and non-GET requests miss.
+
+    CONTRACT: the corpus is a keyed resource table — at most ONE row per
+    (url[, method]), the shape of a fetch (one response per request,
+    http.py:258-281). The round relies on it twice: a selected row yields
+    at most one page row, and |hit rows| == |selected| proves the round
+    had zero misses (the miss job is then skipped — ``_fetch``). A corpus
+    with duplicate keys would fan a request out into several pages and
+    could mask a miss; dedupe it on its key before crawling.
 
     JOIN SHAPE MATTERS: a plain `selected LEFT OUTER corpus` cannot
     broadcast its small (preserved) side, so Spark sort-merge-joins —
@@ -240,12 +235,12 @@ class Selection:
 
     selected: DataFrame
     selected_ranked: DataFrame
-    rank_cache: DataFrame | None
+    rank_cache: DataFrame
     bounded: bool  # broadcast hint proven safe (CrawlConfig.broadcast_max_rows)
     n_sel: int | None = None  # |selected| once counted (prefetch or miss check)
 
     def caches(self) -> list[DataFrame]:
-        return [self.selected] + ([self.rank_cache] if self.rank_cache is not None else [])
+        return [self.selected, self.rank_cache]
 
 
 @dataclass
@@ -392,9 +387,7 @@ class CrawlEngine:
         """Round -0 commit: seed frontier + seed fingerprints into seen
         (admission == schedule-time seen append, scheduler.py:45-50)."""
         cfg = self.cfg
-        seeds = seeds_frontier(
-            self.spark, cfg.seeds, cfg.t0, cfg.seed_priority, cfg.seed_recrawl
-        )
+        seeds = seeds_frontier(self.spark, cfg.seeds, cfg.t0, cfg.seed_recrawl)
         from acrawler_spark.operators.dedup import dedupe_within_round
 
         seeds = dedupe_within_round(seeds)
@@ -452,7 +445,7 @@ class CrawlEngine:
         # the new frontier is frontier ANTI-JOIN selected (broadcast, the
         # selected set is the small side), so the budget windows run exactly
         # once and n_deferred falls out of the commit arithmetic.
-        selected, _deferred = apply_host_budgets(
+        selected = apply_host_budgets(
             eligible,
             uniform=cfg.effective_host_budget(),
             special=cfg.special_host_budgets,
@@ -464,15 +457,8 @@ class CrawlEngine:
         # schedule rank: the order the reference's workers would pop these
         # tasks (score order). Exact global rank via range partitioning +
         # offset merge (no single-partition Window — scale-safe for
-        # unbounded selected sets); record_rank=False skips the extra tiny
-        # count job for bench rounds that never read the rank.
-        rank_cache = None
-        if cfg.record_rank:
-            selected_ranked, rank_cache = global_schedule_rank(selected)
-        else:
-            selected_ranked = selected.withColumn(
-                "rank", F.monotonically_increasing_id().cast("long")
-            )
+        # unbounded selected sets); it also orders within-round discovery.
+        selected_ranked, rank_cache = global_schedule_rank(selected)
         # Broadcast bound: round_cap if set, else the frontier row count
         # PLUS the raw inbox url count — together an upper bound on this
         # round's selected set (selected ⊆ eligible ⊆ frontier ∪ inbox). At
@@ -793,7 +779,7 @@ class CrawlEngine:
     def _fetch(self, st: RoundState, claimed: tuple | None) -> None:
         """The pages stage (fetch-join + parse + staged write, or the
         claimed prefetch's), the corpus misses, and the fetch counters."""
-        cfg, rnd, sel, cols = self.cfg, st.rnd, st.sel, st.frontier.columns
+        rnd, sel, cols = st.rnd, st.sel, st.frontier.columns
         if claimed is not None:
             _, obs_pages, staged_cols = claimed
         else:
@@ -807,25 +793,22 @@ class CrawlEngine:
         # CPU at 16 cores for a (steady-state) empty result. The anti-join
         # against written hit fingerprints is O(selected), broadcast under
         # the same proven bound, and appends a usually-empty second file.
-        # Fast path: under the corpus_unique_keys contract a selected row
-        # matches at most one corpus row, so |hit rows| == |selected| proves
-        # zero misses — the whole miss job (fp broadcast build + anti-join
-        # stage + delta append, ~1.5-2 s of driver-serial cost per round at
-        # any core count) is skipped. The selected count is one tiny scan
-        # of the cache the pages job just materialized (free when the
-        # prefetch already counted it; an Observation on the fetch join's
-        # build side would be free, but CollectMetrics under an AQE
-        # broadcast stage doesn't reliably surface its row). Steady-state
-        # rounds of a converged crawl are all hits, so this is the common
-        # case the round loop is sized for.
+        # Fast path: under the keyed-corpus contract (build_fetch_join) a
+        # selected row matches at most one corpus row, so |hit rows| ==
+        # |selected| proves zero misses — the whole miss job (fp broadcast
+        # build + anti-join stage + delta append, ~1.5-2 s of driver-serial
+        # cost per round at any core count) is skipped. The selected count
+        # is one tiny scan of the cache the pages job just materialized
+        # (free when the prefetch already counted it; an Observation on the
+        # fetch join's build side would be free, but CollectMetrics under an
+        # AQE broadcast stage doesn't reliably surface its row).
+        # Steady-state rounds of a converged crawl are all hits, so this is
+        # the common case the round loop is sized for.
         stats = [obs_pages.get]
-        all_hits = False
-        if cfg.corpus_unique_keys:
-            if sel.n_sel is None:
-                with self._job(f"r{rnd} miss check: cached selected count"):
-                    sel.n_sel = sel.selected.count()
-            all_hits = int(stats[0]["n_selected"] or 0) == sel.n_sel
-        if not all_hits:
+        if sel.n_sel is None:
+            with self._job(f"r{rnd} miss check: cached selected count"):
+                sel.n_sel = sel.selected.count()
+        if int(stats[0]["n_selected"] or 0) != sel.n_sel:
             hit_fps = self.store.read_delta_one("pages", rnd).select("fingerprint")
             miss_staged, obs_miss = self._stage_pages(
                 rnd, cols, build_misses(sel.selected_ranked, hit_fps, cols, sel.bounded)
@@ -900,9 +883,7 @@ class CrawlEngine:
                 cb_col.alias("callback_family"),
                 links_col.alias("links")
             )
-            candidates = candidates_from_links(
-                link_src, rnd, now, cfg.child_priority, cfg.max_depth
-            )
+            candidates = candidates_from_links(link_src, rnd, now, cfg.max_depth)
             admitted = admit_new_candidates(candidates, st.seen, self.bloom)
             if st.new_seed_rows is not None:
                 # frontier invariant: at most one row per fingerprint (the
@@ -1183,17 +1164,11 @@ class CrawlEngine:
 
     def _frontier_stats(self) -> tuple[int, float | None]:
         """(row count, min exetime) of the committed frontier — read from the
-        commit manifest (observed during the frontier write, zero jobs); one
-        agg-job fallback for stores written before the stats existed."""
+        commit manifest (observed during the frontier write, zero jobs; both
+        bootstrap and every round commit record them)."""
         m = self.store.read_manifest()
-        stats = m.get("rounds", {}).get(str(self.store.last_round), {})
-        if "frontier_n" in stats:
-            return int(stats["frontier_n"]), stats.get("frontier_min_exetime")
-        frontier = self.store.read_frontier()
-        agg = frontier.agg(
-            F.count("*").alias("n"), F.min("exetime").alias("min_exetime")
-        ).first()
-        return int(agg["n"] or 0), agg["min_exetime"]
+        stats = m["rounds"][str(self.store.last_round)]
+        return int(stats["frontier_n"]), stats["frontier_min_exetime"]
 
     def flush_metrics(self) -> None:
         """Materialize the metrics table from the commit manifest (the

@@ -7,6 +7,7 @@ Usage: python scripts/audit_plans.py 2>/dev/null > plans.md
 from __future__ import annotations
 
 import io
+import os
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -32,16 +33,16 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-def main() -> None:
-    spark = get_spark("plans", master="local[4]", shuffle_partitions=4)
+def render(spark, work: str) -> str:
+    """The markdown plan dump; its parquet inputs are written under ``work``."""
     out = ["# PLANS — physical-plan evidence (sf0.001, local mode)", ""]
 
-    tmp = tempfile.mkdtemp()
+    tmp = os.path.join(work, "corpus")
     corpus_from_documents(spark, SF, n_hosts=8, fanout=4).write.mode("overwrite").parquet(tmp)
     corpus = spark.read.parquet(tmp)
 
     frontier = seeds_frontier(spark, [f"http://site{h}.test/p/{h}?b=2&a=1" for h in range(8)], 0.0)
-    ftmp = tempfile.mkdtemp()
+    ftmp = os.path.join(work, "frontier")
     frontier.write.mode("overwrite").parquet(ftmp)
     frontier = spark.read.parquet(ftmp)
 
@@ -68,7 +69,7 @@ def main() -> None:
     ))
 
     # 3. politeness two-phase salted window
-    sel, _ = apply_host_budgets(frontier, uniform=2, special={"site1": 1}, salt_n=4)
+    sel = apply_host_budgets(frontier, uniform=2, special={"site1": 1})
     sections.append((
         "Politeness budgets (expect: two Window nodes — (host,salt) then host — "
         "over exchanges keyed accordingly; unlimited-host side is filter-only)",
@@ -110,8 +111,13 @@ def main() -> None:
 
     for title, df in sections:
         out += [f"## {title}", "", "```", plan_of(df).strip(), "```", ""]
+    return "\n".join(out)
 
-    print("\n".join(out))
+
+def main() -> None:
+    spark = get_spark("plans", master="local[4]", shuffle_partitions=4)
+    with tempfile.TemporaryDirectory() as work:
+        print(render(spark, work))
 
 
 if __name__ == "__main__":

@@ -16,6 +16,10 @@ requires (map-key dedup policy, Arrow) — master, executor sizing, and
 shuffle width come from spark-submit, which is the whole point of the
 entrypoint: the same file runs on local[N] and on a 1000-executor cluster.
 
+fetch_log's ``rank`` is always the exact per-round schedule rank: the
+order ``tests/oracle.py`` pins, and the order in which a round's
+discovered links are deduplicated (first discovered wins).
+
 Resume is implicit in the store: re-submitting with the same ``--store``
 continues from the last committed round (a killed job replays its
 uncommitted staged files away first — plans/engine.py run()).
@@ -58,8 +62,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="corpus bucket(url) partition count for DPP (Iceberg bucket analog)")
     p.add_argument("--seeds-inbox", default=None,
                    help="drop-dir for between-round seed ingestion (redis feeder analog)")
-    p.add_argument("--record-rank", action="store_true",
-                   help="record the global per-round rank in fetch_log (order-parity audits)")
     p.add_argument("--write-partitions", type=int, default=None,
                    help="files per store delta write (default: session shuffle width)")
     return p
@@ -118,7 +120,6 @@ def main(argv: list[str] | None = None) -> int:
         bloom_bits=args.bloom_bits,
         corpus_bucket_n=args.corpus_bucket_n,
         seeds_inbox=args.seeds_inbox,
-        record_rank=args.record_rank,
         detailed_metrics=False,
     )
     t0 = time.monotonic()

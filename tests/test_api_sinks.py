@@ -1,5 +1,6 @@
 """Fluent builder API + sinks: file sink skip-if-exists, upsert, handlers."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from acrawler_spark.api import Crawl
@@ -66,3 +67,12 @@ def test_upsert_last_wins(spark):
     out = upsert_last_wins(existing, incoming, key="k", version="v")
     rows = {r.k: (r.v, r.x) for r in out.collect()}
     assert rows == {1: (12, "a2"), 2: (5, "b"), 3: (1, "c")}
+
+
+def test_config_rejects_unknown_name():
+    crawl = Crawl(seeds=seed_urls(1)).config(max_rounds=3, use_bloom=False)
+    assert (crawl._cfg.max_rounds, crawl._cfg.use_bloom) == (3, False)
+    # a misspelt (or removed) field must fail loudly, not ride along unused
+    with pytest.raises(TypeError, match="max_round"):
+        crawl.config(max_round=5)
+    assert crawl._cfg.max_rounds == 3

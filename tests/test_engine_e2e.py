@@ -2,9 +2,13 @@
 crawl order, final seen set, extracted text (byte-identical), and the
 retry/failure lifecycle — on the deterministic fixture page graph."""
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from acrawler_spark import kernel
 from acrawler_spark.plans.engine import CrawlConfig, CrawlEngine
 from acrawler_spark.sources.corpus import build_fixture_pages, fixture_corpus_df, seed_urls
 from acrawler_spark.sources.store import CheckpointStore
@@ -40,14 +44,17 @@ def run_both(spark, tmp_path, *, n_hosts=3, depth=2, fanout=3, use_bloom=True, *
     return engine, store, history, expected, pages
 
 
-def assert_match(spark, store, history, expected):
-    # per-round schedule order (rank within round)
+def schedule_of(store) -> dict[int, list[str]]:
+    """Per-round fetched urls in schedule (fetch_log rank) order."""
     log = store.read_appended("fetch_log").select("round", "rank", "url_canon").collect()
-    got_schedule = {}
+    schedule: dict[int, list] = {}
     for r in log:
-        got_schedule.setdefault(r["round"], []).append((r["rank"], r["url_canon"]))
-    got_schedule = {k: [u for _, u in sorted(v)] for k, v in got_schedule.items()}
-    assert got_schedule == expected.schedule
+        schedule.setdefault(r["round"], []).append((r["rank"], r["url_canon"]))
+    return {k: [u for _, u in sorted(v)] for k, v in schedule.items()}
+
+
+def assert_match(spark, store, history, expected):
+    assert schedule_of(store) == expected.schedule
 
     # final seen set
     got_seen = {r["fingerprint"] for r in store.read_appended("seen").collect()}
@@ -72,8 +79,6 @@ def assert_match(spark, store, history, expected):
 
 
 def test_unbounded_crawl_matches_oracle(spark, tmp_path):
-    import os
-
     engine, store, history, expected, pages = run_both(spark, tmp_path)
     assert_match(spark, store, history, expected)
     # sanity: the crawl actually covered the graph (3 hosts x 13 pages,
@@ -91,6 +96,12 @@ def test_unbounded_crawl_matches_oracle(spark, tmp_path):
     for d in deltas:
         files = [f for f in os.listdir(os.path.join(seen_root, d)) if f.endswith(".parquet")]
         assert len(files) <= width, (d, files)
+    # the lineage rollup (detailed_metrics, on by default) accounts for
+    # every fetch of its round exactly once
+    lineage = store.read_appended("lineage").groupBy("round").agg(F.sum("n_rows").alias("n"))
+    assert {r["round"]: r["n"] for r in lineage.collect()} == {
+        h["round"]: h["selected"] for h in history
+    }
 
 
 def test_extracted_text_equals_corpus_oracle_column(spark, tmp_path):
@@ -131,11 +142,15 @@ def test_round_cap_matches_oracle(spark, tmp_path):
 
 def test_no_bloom_same_result(spark, tmp_path):
     e1 = run_both(spark, tmp_path / "a", use_bloom=True)
-    e2 = run_both(spark, tmp_path / "b", use_bloom=False)
+    e2 = run_both(spark, tmp_path / "b", use_bloom=False, detailed_metrics=False)
     assert e1[3].schedule == e2[3].schedule  # same oracle
     s1 = {r["fingerprint"] for r in e1[1].read_appended("seen").collect()}
     s2 = {r["fingerprint"] for r in e2[1].read_appended("seen").collect()}
     assert s1 == s2
+    # detailed_metrics=False writes no lineage delta in any round
+    assert e1[1].read_appended("lineage") is not None
+    assert e2[1].read_appended("lineage") is None
+    assert not os.path.exists(os.path.join(e2[1].root, "lineage"))
 
 
 def test_recrawl_reenqueues(spark, tmp_path):
@@ -148,3 +163,40 @@ def test_recrawl_reenqueues(spark, tmp_path):
     seed_fetches = log.filter(F.col("url_canon") == "http://site0.test/p/0").count()
     assert seed_fetches >= 2
     assert_match(spark, store, history, expected)
+
+
+def test_in_pattern_gates_parse(spark, tmp_path):
+    """CrawlConfig.in_pattern (parser.py:62-73): a fetched page whose url
+    does not match is ok but never parsed — no text, no item, no followed
+    links — so the fetched set is a BFS that expands matching pages only."""
+    n_hosts, depth, fanout = 4, 2, 3
+    # seeds on the matching hosts only: each host's depth-2 pages link the
+    # next host's root, so site1 and site3 are reached by links alone
+    in_pattern = r"^http://site[02]\.test/"
+    pages = {r["url"]: r for r in build_fixture_pages(n_hosts, depth, fanout)}
+    corpus = fixture_corpus_df(spark, n_hosts=n_hosts, depth=depth, fanout=fanout)
+    cfg = CrawlConfig(seeds=["http://site0.test/p/0", "http://site2.test/p/0"],
+                      follow_patterns=FOLLOW, in_pattern=in_pattern, bloom_bits=1 << 14)
+    store = CheckpointStore(str(tmp_path / "state"), spark)
+    CrawlEngine(spark, cfg, store).run(corpus)
+
+    want, todo = set(), [kernel.canonicalize_url(u) for u in cfg.seeds]
+    while todo:
+        url = todo.pop()
+        if url in want:
+            continue
+        want.add(url)
+        page = pages.get(url)
+        if page is not None and re.search(in_pattern, url):
+            html = kernel.decode_body(page["html"], page["encoding"])
+            todo += [kernel.canonicalize_url(u) for u in kernel.follow_links(html, url, FOLLOW)]
+
+    got = store.read_appended("pages").select("url_canon", "ok", "text", "links").collect()
+    assert {r["url_canon"] for r in got} == want
+    gated = [r for r in got if r["url_canon"] in pages and not re.search(in_pattern, r["url_canon"])]
+    assert {r["url_canon"] for r in gated} == {"http://site1.test/p/0", "http://site3.test/p/0"}
+    assert all(r["ok"] and r["text"] is None and not r["links"] for r in gated)
+    items = {r["url"]: r["extracted_text"] for r in store.read_appended("items").collect()}
+    assert items == {
+        u: pages[u]["text"] for u in want if u in pages and re.search(in_pattern, u)
+    }

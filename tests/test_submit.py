@@ -4,7 +4,9 @@ Packages acrawler_spark into a zip (scripts/package.sh logic), writes a
 fixture corpus to parquet, then drives scripts/submit_crawl.py through a
 REAL spark-submit with the repo deliberately absent from the child's
 import path — the zip must provide the package, exactly as on a cluster.
-A second submit against the same store proves resume-on-resubmit.
+The first submit's store is checked against the hermetic oracle (schedule
+order and seen set); a second submit against the same store proves
+resume-on-resubmit.
 """
 
 import json
@@ -47,7 +49,11 @@ def _submit(args: list[str], cwd: str) -> dict:
 
 
 def test_spark_submit_pyfiles_crawl_and_resume(spark, tmp_path):
-    from acrawler_spark.sources.corpus import fixture_corpus_df
+    from acrawler_spark.sources.corpus import build_fixture_pages, fixture_corpus_df
+    from acrawler_spark.sources.store import CheckpointStore
+
+    from tests.oracle import OracleCrawl
+    from tests.test_engine_e2e import schedule_of
 
     zip_path = str(tmp_path / "acrawler_spark.zip")
     _build_zip(zip_path)
@@ -74,6 +80,15 @@ def test_spark_submit_pyfiles_crawl_and_resume(spark, tmp_path):
     # exactly once; dead-link misses add ok=False rows on top (retry ladder)
     assert r1["ok"] == n_pages
     assert r1["fetched"] >= n_pages
+    # and it is the reference's crawl: per-round schedule order (fetch_log
+    # rank) and the final seen set equal the oracle's
+    seeds = ["http://site0.test/p/0", "http://site1.test/p/0"]
+    want = OracleCrawl(
+        build_fixture_pages(2, 2, 3), seeds, [r"site\d+\.test"]
+    ).run(max_rounds=10)
+    got = CheckpointStore(store, spark)
+    assert schedule_of(got) == want.schedule
+    assert {r["fingerprint"] for r in got.read_appended("seen").collect()} == want.seen
 
     # resubmit with the same store: the crawl is finished, so the engine
     # resumes, finds no due frontier rows, and adds zero rounds/fetches
