@@ -31,7 +31,7 @@ within-round discovery order (parent rank, link position).
 from __future__ import annotations
 
 import time
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor, as_completed, wait
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -230,14 +230,18 @@ def build_misses(
 
 @dataclass
 class Selection:
-    """One round's selected rows (``CrawlEngine._prepare_round``): the
-    persisted politeness/round-cap output and its schedule rank."""
+    """One round's head (``CrawlEngine._head``): the persisted selection
+    and its schedule rank, then what its pages stage staged and counted."""
 
     selected: DataFrame
     selected_ranked: DataFrame
     rank_cache: DataFrame
     bounded: bool  # broadcast hint proven safe (CrawlConfig.broadcast_max_rows)
-    n_sel: int | None = None  # |selected| once counted (prefetch or miss check)
+    frontier_n: int  # upper bound on |frontier ∪ inbox|: the broadcast bounds
+    blocked: DataFrame | None  # the robots split's blocked half (None: no rules)
+    obs: Observation | None = None  # pages-stage counters
+    staged_cols: list[str] = field(default_factory=list)  # pages delta columns
+    n_sel: int = 0  # |selected|: the miss check's fast path
 
     def caches(self) -> list[DataFrame]:
         return [self.selected, self.rank_cache]
@@ -245,12 +249,11 @@ class Selection:
 
 @dataclass
 class Prefetch:
-    """Round ``rnd`` computed ahead by the previous round's commit; ``fut``
-    yields ``(Selection, pages Observation, staged columns)``. ``release``
-    holds the launching round's caches (the prefetch reads its admitted
-    rows): they live on this driver-side handle, so whoever retires it (the
-    claim or a discard, after a successful or a failed job) unpersists
-    them."""
+    """Round ``rnd``'s head computed ahead by the previous round's commit;
+    ``fut`` yields its ``Selection``. ``release`` holds the launching
+    round's caches (the prefetch reads its admitted rows): they live on
+    this driver-side handle, so whoever retires it (the claim or a discard,
+    after a successful or a failed job) unpersists them."""
 
     rnd: int
     fut: Future
@@ -273,7 +276,7 @@ class RoundState:
     inbox_files: list[str] = field(default_factory=list)
     inbox_n: int = 0  # raw inbox url count — free at drain, bounds admitted
     new_seed_rows: DataFrame | None = None
-    robots_blocked_fps: DataFrame | None = None
+    handed_off: bool = False  # caches now belong to the next round's prefetch
     # fetch
     pages: DataFrame | None = None
     counts: dict[str, int] = field(default_factory=dict)
@@ -292,8 +295,9 @@ class RoundState:
         self._last = t
 
     def caches(self) -> list[DataFrame]:
-        seeds = [self.new_seed_rows] if self.new_seed_rows is not None else []
-        return [*self.sel.caches(), self.admitted, *seeds]
+        # only those created so far: a stage may fail before the later ones
+        sel = self.sel.caches() if self.sel is not None else []
+        return [df for df in (*sel, self.admitted, self.new_seed_rows) if df is not None]
 
 
 class CrawlEngine:
@@ -335,13 +339,20 @@ class CrawlEngine:
         else:
             self.robots = None
             self.robots_delay = None
-        # the next round's selection + staged pages delta, computed on the
-        # pipeline pool while the current round's commit tail drains
-        # (launched by _launch_prefetch, retired by _claim_prefetch or
-        # discard_prefetch)
+        # the next round's head, computed on the executor while the current
+        # round's commit tail drains (launched by _launch_prefetch, retired
+        # by _claim_prefetch or discard_prefetch)
         self._prefetch: Prefetch | None = None
-        self._pipe_pool: ThreadPoolExecutor | None = None  # lazy, engine lifetime
-        self._in_run = False  # True while run() drives the round loop
+        self._pool: ThreadPoolExecutor | None = None  # see _submit
+
+    def _submit(self, fn, *args) -> Future:
+        """The engine's one executor runs the commit's concurrent writes (at
+        most five) and the next round's head. Whoever submits a future waits
+        on it (the commit in a ``finally``, a prefetch's claim or discard);
+        ``run()`` shuts the executor down on its way out."""
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(max_workers=6)
+        return self._pool.submit(fn, *args)
 
     @contextmanager
     def _job(self, label: str):
@@ -413,34 +424,25 @@ class CrawlEngine:
              "frontier_min_exetime": fstats["min_exetime"]},
         )
 
-    # -- one round: selection and the next-round prefetch ---------------------
+    # -- one round: the head and the next-round prefetch -----------------------
 
-    def _prepare_round(
-        self,
-        rnd: int,
-        frontier: DataFrame,
-        inbox_n: int = 0,
-        frontier_n: int | None = None,
-    ) -> Selection:
+    def _prepare_round(self, rnd: int, frontier: DataFrame, frontier_n: int) -> Selection:
         """Round `rnd`'s selection over ``frontier``: eligibility pushdown →
         robots split → salted politeness windows → round cap → persist
-        (+ rank). Lazy and READ-ONLY — it stages nothing, so the previous
-        round's commit may build it for a prefetch over its in-memory next
-        frontier. `now` is deterministic (t0 + rnd·round_seconds), so a
-        prefetched selection is byte-identical to what the round itself
-        would compute.
+        (+ rank). Lazy — ``_head`` runs it. `now` is deterministic
+        (t0 + rnd·round_seconds), so a prefetched selection is
+        byte-identical to what the round itself would compute.
 
-        ``frontier_n`` is the frontier's row count for the broadcast bound:
-        None reads the manifest stats (inline path); a prefetch passes the
-        count its round observed (the manifest entry is not committed yet).
-        ``inbox_n`` adds this round's raw inbox url count."""
+        ``frontier_n`` bounds the frontier's row count (plus the round's raw
+        inbox url count) for the broadcast hints."""
         cfg = self.cfg
         now = cfg.t0 + rnd * cfg.round_seconds
         eligible = frontier.filter(F.col("exetime") <= F.lit(now))
+        blocked = None
         if self.robots is not None:
             from acrawler_spark.operators.robots import apply_robots
 
-            eligible, _ = apply_robots(eligible, self.robots)
+            eligible, blocked = apply_robots(eligible, self.robots)
         # deferred (eligible-but-over-budget) rows are never materialized:
         # the new frontier is frontier ANTI-JOIN selected (broadcast, the
         # selected set is the small side), so the budget windows run exactly
@@ -464,13 +466,44 @@ class CrawlEngine:
         # round's selected set (selected ⊆ eligible ⊆ frontier ∪ inbox). At
         # a 10^10-row frontier the bound exceeds broadcast_max_rows and the
         # hint is withheld (AQE plans from runtime stats instead).
-        if cfg.round_cap is not None:
-            sel_bound = cfg.round_cap
-        else:
-            sel_bound = self._frontier_stats()[0] if frontier_n is None else frontier_n
-            sel_bound += inbox_n
+        sel_bound = cfg.round_cap if cfg.round_cap is not None else frontier_n
         bounded = sel_bound <= cfg.broadcast_max_rows
-        return Selection(selected, selected_ranked, rank_cache, bounded)
+        return Selection(selected, selected_ranked, rank_cache, bounded, frontier_n, blocked)
+
+    def _head(
+        self, rnd: int, frontier: DataFrame, frontier_n: int, corpus: DataFrame
+    ) -> Selection:
+        """Round ``rnd``'s head, the same code whether the round runs it
+        inline or the previous round's commit prefetches it: the selection
+        (``_prepare_round``), the robots split's staged blocked rows, the
+        pages stage (fetch-join + parse + staged write) and the |selected|
+        count the miss check compares against. A failure releases the
+        head's caches and removes its staged files before it re-raises."""
+        sel = self._prepare_round(rnd, frontier, frontier_n)
+        try:
+            # robots.txt admission (north-rule addition; absent in reference
+            # — SURVEY §7). Blocked rows are dropped permanently (they stay
+            # seen); _follow anti-joins the staged delta out of the frontier.
+            if sel.blocked is not None:
+                with self._job(f"r{rnd} robots: blocked split write"):
+                    self.store.write_delta(
+                        "robots_blocked",
+                        rnd,
+                        sel.blocked.select("url", "url_canon", "fingerprint", "host")
+                        .withColumn("round", F.lit(rnd)),
+                    )
+            sel.obs, sel.staged_cols = self._run_pages_job(
+                rnd, sel, frontier.columns, corpus
+            )
+            # one tiny scan of the cache the pages job just materialized (an
+            # Observation on the fetch join's AQE broadcast side is unreliable)
+            with self._job(f"r{rnd} miss check: cached selected count"):
+                sel.n_sel = sel.selected.count()
+            return sel
+        except BaseException:
+            self._unpersist(sel.caches())
+            self.store.abort_uncommitted(rnd)
+            raise
 
     def _inbox_pending(self) -> bool:
         return self.feeder is not None and bool(self.feeder.pending_files())
@@ -482,63 +515,40 @@ class CrawlEngine:
 
     def _launch_prefetch(
         self, st: RoundState, core_stats: dict, n_admitted: int, max_round: int | None
-    ) -> bool:
-        """Start round rnd+1 on the engine's pipeline pool while round rnd's
-        commit tail drains: its selection over the IN-MEMORY next frontier
-        (core ∪ admitted — no wait for the admitted append or the commit;
-        byte-identical to the committed frontier) and its whole pages stage
-        (fetch-join + parse + staged write). Launched only when round rnd+1 has due work:
-        admitted rows carry exetime == now, and the core write observed the
-        core's min exetime. Never past ``max_round``, never with inbox files
-        pending (their seeds are missing from the prefetched frontier), and
-        only while run() drives the loop: a direct run_round() caller gets
-        strictly synchronous rounds (a prefetch it never claims could race
-        another engine on the same store). Returns whether it launched —
-        this round's caches then belong to the handle."""
+    ) -> None:
+        """Submit round rnd+1's head while round rnd's commit tail drains,
+        over the IN-MEMORY next frontier (core ∪ admitted — byte-identical
+        to the committed frontier). Only when round rnd+1 has due work
+        (admitted rows carry exetime == now; the core write observed the
+        core's min exetime), never with inbox files pending (their seeds are
+        missing from that frontier), and never at ``max_round``: None (a
+        direct run_round() caller) launches none, so a prefetch nobody
+        claims cannot race another engine on the same store. On launch this
+        round's caches belong to the handle."""
         cfg, rnd = self.cfg, st.rnd
         core_min = core_stats["min_exetime"]
         due = n_admitted > 0 or (
             core_min is not None and core_min <= cfg.t0 + (rnd + 1) * cfg.round_seconds
         )
-        if not (
-            self._in_run
-            and due
-            and (max_round is None or rnd < max_round)
-            and not self._inbox_pending()
-        ):
-            return False
+        if max_round is None or rnd >= max_round or not due or self._inbox_pending():
+            return
         cols = st.frontier.columns
         frontier = st.core_union.unionByName(st.admitted.select(*cols))
         # exact |frontier(rnd)|: both parts were counted by their jobs
         frontier_n = int(core_stats["n"] or 0) + n_admitted
-        corpus = st.corpus
+        fut = self._submit(self._head, rnd + 1, frontier, frontier_n, st.corpus)
+        self._prefetch = Prefetch(rnd + 1, fut, st.caches())
+        st.handed_off = True
 
-        def job() -> tuple:
-            sel = self._prepare_round(rnd + 1, frontier, frontier_n=frontier_n)
-            try:
-                # pulls the politeness shuffle forward and warms the cache;
-                # the count doubles as the miss fast-path's |selected|
-                with self._job(f"r{rnd + 1} prepare: politeness windows + selected cache"):
-                    sel.n_sel = sel.selected.count()
-                return (sel, *self._run_pages_job(rnd + 1, sel, cols, corpus))
-            except BaseException:
-                self._unpersist(sel.caches())
-                raise
-
-        if self._pipe_pool is None:
-            self._pipe_pool = ThreadPoolExecutor(max_workers=2)
-        self._prefetch = Prefetch(rnd + 1, self._pipe_pool.submit(job), st.caches())
-        return True
-
-    def _claim_prefetch(self, rnd: int) -> tuple | None:
-        """Round ``rnd``'s prefetch result, if one is pending for it and no
+    def _claim_prefetch(self, rnd: int) -> Selection | None:
+        """Round ``rnd``'s prefetched head, if one is pending for it and no
         inbox file has arrived since it launched (its frontier lacks those
         seeds; they drain inline instead). Any other pending prefetch is
         discarded first: its staged write would race this round's inline
         rewrite of the same delta dir. ``result()`` waits out the in-flight
         pages write — normally the only thing left running, so this IS the
-        round's pages wall. A failed prefetch aborts its staged files and
-        re-raises."""
+        round's pages wall. A failed head has already released its caches
+        and staged files; the error re-raises here."""
         pf = self._prefetch
         if pf is None:
             return None
@@ -548,9 +558,6 @@ class CrawlEngine:
         self._prefetch = None
         try:
             return pf.fut.result()
-        except BaseException:
-            self.store.abort_uncommitted(rnd)
-            raise
         finally:
             # the launching round's caches: every prefetch job is done
             self._unpersist(pf.release)
@@ -558,17 +565,17 @@ class CrawlEngine:
     def discard_prefetch(self) -> None:
         """Retire the pending prefetch, if any: wait out its in-flight job,
         drop its caches and the launching round's, and remove the staged
-        (never-committed) pages delta. Rare path — an inbox arrival between
+        (never-committed) deltas. Rare path — an inbox arrival between
         launch and claim, or the crawl ending early (an ``until_ancestor``
         stop, an error); run() calls it on the way out."""
         pf, self._prefetch = self._prefetch, None
         if pf is None:
             return
         try:
-            sel = pf.fut.result()[0]
+            sel_caches = pf.fut.result().caches()
         except Exception:
-            sel = None  # the failed job released its own selection
-        self._unpersist(pf.release + (sel.caches() if sel is not None else []))
+            sel_caches = []  # the failed head released its own selection
+        self._unpersist(pf.release + sel_caches)
         self.store.abort_uncommitted(pf.rnd)
 
     def _stage_pages(
@@ -687,8 +694,8 @@ class CrawlEngine:
         DROPPED (text+links kept). Every downstream consumer (items,
         fetch_log, candidates, retry/recrawl, metrics) is a column-pruned
         scan of this delta — the UDF runs exactly once per page and no
-        multi-hundred-MB cache blocks churn the executors. Callable from
-        the round's own thread OR the pipeline pool (prefetch)."""
+        multi-hundred-MB cache blocks churn the executors. Runs inside
+        ``_head``, on the round's own thread or the executor (prefetch)."""
         if self.cfg.http_fetch is not None:
             from acrawler_spark.sources.netfetch import build_fetch_http
 
@@ -708,12 +715,10 @@ class CrawlEngine:
 
     def run_round(self, rnd: int, corpus: DataFrame, max_round: int | None = None) -> dict:
         """Run round ``rnd`` and commit it: select → fetch/parse →
-        follow/admit/lifecycle → commit. The round claims its own prefetch
-        when the previous round's commit launched one for it (mode
-        "prefetch"); otherwise it computes everything in-round ("inline").
-        ``max_round`` is the caller's last round: at it, the commit
-        launches no next-round prefetch (work that would only be
-        discarded)."""
+        follow/admit/lifecycle → commit. The round claims its head when the
+        previous round's commit prefetched it (mode "prefetch"); otherwise
+        it runs the same head itself ("inline"). ``max_round`` is the
+        caller's last round (see ``_launch_prefetch``)."""
         start = time.monotonic()  # a claim's wait is part of the pages stage
         claimed = self._claim_prefetch(rnd)
         st = RoundState(
@@ -724,66 +729,47 @@ class CrawlEngine:
             frontier=self.store.read_frontier(),
             seen=self.store.read_appended("seen"),
             timing={"mode": "inline" if claimed is None else "prefetch"},
+            sel=claimed,
         )
-        self._select(st, claimed)
-        self._fetch(st, claimed)
-        self._follow(st)
-        self._commit(st, max_round)
+        try:
+            self._select(st)
+            self._fetch(st)
+            self._follow(st)
+            self._commit(st, max_round)
+        finally:
+            if not st.handed_off:
+                self._unpersist(st.caches())
         return {
             "round": rnd, **st.counts,
             "timing": st.timing, "wall_s": round(time.monotonic() - st.start, 3),
         }
 
-    def _select(self, st: RoundState, claimed: tuple | None) -> None:
-        """Inbox seeds, then the selection (a claimed prefetch already ran
-        it), then the robots split's staged write."""
-        if claimed is not None:
+    def _select(self, st: RoundState) -> None:
+        """The round's head, unless a claimed prefetch already ran it: the
+        inbox seeds join the round-start frontier, then ``_head``."""
+        if st.sel is not None:
             # the prefetch was claimed with an empty inbox; files dropped
             # since then drain next round (at-least-once, unchanged)
-            st.sel = claimed[0]
-        else:
-            if self.feeder is not None:
-                # between-round seed ingestion (redis feeder analog;
-                # at-least-once, idempotent through the dupefilter —
-                # handlers.py:282-293)
-                inbox_df, st.inbox_files, st.inbox_n = self.feeder.drain(st.rnd, st.now)
-                if inbox_df is not None:
-                    st.new_seed_rows = admit_new_candidates(
-                        inbox_df, st.seen, self.bloom
-                    ).persist()
-                    st.frontier = st.frontier.unionByName(
-                        st.new_seed_rows.select(*st.frontier.columns)
-                    )
-            st.sel = self._prepare_round(st.rnd, st.frontier, st.inbox_n)
-        # robots.txt admission (north-rule addition; absent in reference —
-        # SURVEY §7). Blocked rows are dropped permanently (they stay seen).
-        # The split is rebuilt over this round's (file-backed) frontier —
-        # a prefetched selection's plan reads the previous round's released
-        # caches — and its delta is always staged by the round committing it.
-        if self.robots is not None:
-            from acrawler_spark.operators.robots import apply_robots
+            return
+        if self.feeder is not None:
+            # between-round seed ingestion (redis feeder analog;
+            # at-least-once, idempotent through the dupefilter —
+            # handlers.py:282-293)
+            inbox_df, st.inbox_files, st.inbox_n = self.feeder.drain(st.rnd, st.now)
+            if inbox_df is not None:
+                st.new_seed_rows = admit_new_candidates(
+                    inbox_df, st.seen, self.bloom
+                ).persist()
+                st.frontier = st.frontier.unionByName(
+                    st.new_seed_rows.select(*st.frontier.columns)
+                )
+        frontier_n = self._frontier_stats()[0] + st.inbox_n
+        st.sel = self._head(st.rnd, st.frontier, frontier_n, st.corpus)
 
-            _, blocked = apply_robots(
-                st.frontier.filter(F.col("exetime") <= F.lit(st.now)), self.robots
-            )
-            self.store.write_delta(
-                "robots_blocked",
-                st.rnd,
-                blocked.select("url", "url_canon", "fingerprint", "host")
-                .withColumn("round", F.lit(st.rnd)),
-            )
-            st.robots_blocked_fps = self.store.read_delta_one(
-                "robots_blocked", st.rnd
-            ).select("fingerprint")
-
-    def _fetch(self, st: RoundState, claimed: tuple | None) -> None:
-        """The pages stage (fetch-join + parse + staged write, or the
-        claimed prefetch's), the corpus misses, and the fetch counters."""
+    def _fetch(self, st: RoundState) -> None:
+        """The corpus misses after the head's pages stage, and the fetch
+        counters."""
         rnd, sel, cols = st.rnd, st.sel, st.frontier.columns
-        if claimed is not None:
-            _, obs_pages, staged_cols = claimed
-        else:
-            obs_pages, staged_cols = self._run_pages_job(rnd, sel, cols, st.corpus)
         st.tick("pages_stage")
 
         # misses staged SECOND, against the round's own output: the old
@@ -795,19 +781,12 @@ class CrawlEngine:
         # the same proven bound, and appends a usually-empty second file.
         # Fast path: under the keyed-corpus contract (build_fetch_join) a
         # selected row matches at most one corpus row, so |hit rows| ==
-        # |selected| proves zero misses — the whole miss job (fp broadcast
-        # build + anti-join stage + delta append, ~1.5-2 s of driver-serial
-        # cost per round at any core count) is skipped. The selected count
-        # is one tiny scan of the cache the pages job just materialized
-        # (free when the prefetch already counted it; an Observation on the
-        # fetch join's build side would be free, but CollectMetrics under an
-        # AQE broadcast stage doesn't reliably surface its row).
+        # |selected| (the head's count) proves zero misses — the whole miss
+        # job (fp broadcast build + anti-join stage + delta append, ~1.5-2 s
+        # of driver-serial cost per round at any core count) is skipped.
         # Steady-state rounds of a converged crawl are all hits, so this is
         # the common case the round loop is sized for.
-        stats = [obs_pages.get]
-        if sel.n_sel is None:
-            with self._job(f"r{rnd} miss check: cached selected count"):
-                sel.n_sel = sel.selected.count()
+        stats = [sel.obs.get]
         if int(stats[0]["n_selected"] or 0) != sel.n_sel:
             hit_fps = self.store.read_delta_one("pages", rnd).select("fingerprint")
             miss_staged, obs_miss = self._stage_pages(
@@ -815,7 +794,7 @@ class CrawlEngine:
             )
             with self._job(f"r{rnd} misses: anti-join vs written hits + append"):
                 self.store.append_delta(
-                    "pages", rnd, miss_staged.select(*[F.col(c) for c in staged_cols])
+                    "pages", rnd, miss_staged.select(*[F.col(c) for c in sel.staged_cols])
                 )
             stats.append(obs_miss.get)
 
@@ -944,28 +923,25 @@ class CrawlEngine:
         # lifecycle re-entries — built once, consumed by (a) the frontier
         # core writer and (b) the next-round prefetch's in-memory frontier
         # (core ∪ admitted), which runs politeness for round rnd+1 without
-        # waiting for the frontier files to land. A prefetched selection's
-        # plan holds the previous round's core, so anti-joining it would
-        # chain every prefetched round's plan to the one before — and the
-        # politeness union reads its input twice, so the plan would double
-        # per round. The pages delta holds exactly the selected
-        # fingerprints (a hit or a 404 miss row each), so a claimed round
-        # anti-joins those instead.
-        claimed = st.timing["mode"] == "prefetch"
-        sel_fps = (st.pages if claimed else st.sel.selected).select("fingerprint")
+        # waiting for the frontier files to land. The selected fingerprints
+        # are read back from the staged pages delta (it holds exactly one
+        # hit or 404 miss row per selected row), never from the selection's
+        # plan: a prefetched selection's plan holds the previous round's
+        # core, so anti-joining it would chain every prefetched round's
+        # plan to the one before — and the politeness union reads its
+        # input twice, so the plan would double per round.
+        sel_fps = st.pages.select("fingerprint")
         remaining = st.frontier.join(
             F.broadcast(sel_fps) if st.sel.bounded else sel_fps,
             "fingerprint", "left_anti",
         )
-        if st.robots_blocked_fps is not None:
+        if st.sel.blocked is not None:
             # blocked ⊆ eligible ⊆ frontier ∪ inbox — round_cap does NOT
             # bound it (the cap applies after the robots split), so the
             # hint needs the frontier-count bound even when bounded=True
             # came from round_cap
-            robots_bounded = (
-                self._frontier_stats()[0] + st.inbox_n <= cfg.broadcast_max_rows
-            )
-            fps = st.robots_blocked_fps
+            robots_bounded = st.sel.frontier_n <= cfg.broadcast_max_rows
+            fps = self.store.read_delta_one("robots_blocked", rnd).select("fingerprint")
             remaining = remaining.join(
                 F.broadcast(fps) if robots_bounded else fps, "fingerprint", "left_anti"
             )
@@ -1043,8 +1019,9 @@ class CrawlEngine:
             ), obs
 
         def _frontier_core_job() -> dict:
-            # The anti-join's right side is the (cached) selected
-            # fingerprints, so the politeness windows are NOT recomputed and
+            # The anti-join's right side is the selected fingerprints read
+            # back from the pages delta, so the politeness windows are NOT
+            # recomputed and
             # the big frontier scan streams through one stage. Requires the
             # one-row-per-fingerprint frontier invariant (held by:
             # schedule-time seen admission + the inbox-vs-candidates
@@ -1052,8 +1029,8 @@ class CrawlEngine:
             # (round_cap / frontier_n ≤ broadcast_max_rows); otherwise AQE
             # picks from runtime stats (an unbounded selected set must not
             # be forced driver-side). SPLIT COMMIT: this core part touches
-            # only the prior frontier, the (hot) selected cache, and the
-            # written pages delta — never `admitted` — so it runs
+            # only the prior frontier and the written pages (and robots)
+            # deltas — never `admitted` — so it runs
             # CONCURRENTLY with the admitted materialization instead of
             # serializing behind it; the admitted branch appends after.
             new_frontier, obs = _frontier_obs(st.core_union)
@@ -1098,31 +1075,40 @@ class CrawlEngine:
         # identical 32-task stages — candidates Window + Bloom MapInPandas
         # + Union lineage — 448 task-seconds of run time against 49 CPU-
         # seconds, ~90% lock-wait). items/lineage/frontier-core read only
-        # the pages delta, the selected cache, and the prior frontier (all
-        # hot/materialized by the fetch phase) — they never touch admitted,
+        # the staged deltas and the prior frontier (all written by the
+        # fetch phase) — they never touch admitted,
         # so they run beside the materializer; the seen write and the
         # admitted append then consume a hot cache (the append must also
         # follow the core overwrite, which clears the dir it lands in).
         st.tick("commit_dag_build")  # py4j plan construction since misses tick
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            fut_cache = pool.submit(_cache_job)
-            fut_fcore = pool.submit(_frontier_core_job)
+        futs: list[Future] = []
+
+        def submit(fn) -> Future:
+            futs.append(self._submit(fn))
+            return futs[-1]
+
+        try:
+            fut_cache = submit(_cache_job)
+            fut_fcore = submit(_frontier_core_job)
             extras = []
             if st.spec_items is not None:
-                extras.append(pool.submit(_items_job))
+                extras.append(submit(_items_job))
             if cfg.detailed_metrics:
-                extras.append(pool.submit(_lineage_job))
+                extras.append(submit(_lineage_job))
             n_adm_cached = fut_cache.result()
-            fut_seen = pool.submit(_seen_job)  # hot cache: bloom + write tail
+            fut_seen = submit(_seen_job)  # hot cache: bloom + write tail
             core = fut_fcore.result()
             # both parts of the next frontier are counted: round rnd+1's
             # prefetch overlaps the admitted append, the seen tail and the
             # extras
-            launched = self._launch_prefetch(st, core, n_adm_cached, max_round)
+            self._launch_prefetch(st, core, n_adm_cached, max_round)
             adm = _frontier_admitted_job()
+            for f in as_completed([fut_seen, *extras]):
+                f.result()  # the first failure raises at once
             n_admitted = fut_seen.result()
-            for f in extras:
-                f.result()
+        finally:
+            # a failed commit leaves no write of its own running
+            wait(futs)
         fstats = {
             "n": int(core["n"] or 0) + int(adm["n"] or 0),
             "min_exetime": min(
@@ -1155,10 +1141,6 @@ class CrawlEngine:
         # (Iceberg rewrite_data_files analog)
         if self.store.delta_count("seen") >= cfg.seen_compact_deltas:
             self.store.compact("seen")
-        if not launched:
-            # else the prefetch handle owns them: its in-flight politeness/
-            # pages chain still reads these caches
-            self._unpersist(st.caches())
 
     # -- loop ------------------------------------------------------------------
 
@@ -1215,10 +1197,11 @@ class CrawlEngine:
         (a recrawl re-enqueue re-increments its group).
 
         Rounds are software-pipelined: a round whose successor has due work
-        launches that round's prefetch (selection + pages stage) from its
-        commit, and the successor's run_round claims it. A prefetch still
-        pending when the loop ends (an ``until_ancestor`` stop, an error)
-        is discarded on the way out."""
+        launches that round's head (selection + pages stage, ``_head``) from
+        its commit, and the successor's run_round claims it. A prefetch
+        still pending when the loop ends (an ``until_ancestor`` stop, an
+        error) is discarded on the way out, and the engine's executor is
+        shut down."""
         import math
 
         cfg = self.cfg
@@ -1233,7 +1216,6 @@ class CrawlEngine:
             self.store.abort_uncommitted(self.store.last_round + 2)
         history = []
         rnd = self.store.last_round + 1
-        self._in_run = True
         try:
             while rnd <= max_rounds:
                 now = cfg.t0 + rnd * cfg.round_seconds
@@ -1258,8 +1240,12 @@ class CrawlEngine:
                     if left == 0:
                         break  # group unfinished count == 0 (web.py wait)
         finally:
-            self._in_run = False
             self.discard_prefetch()
+            if self._pool is not None:
+                # every future was waited on by its submitter (the commit,
+                # the claim, the discard above): nothing is left to wait for
+                self._pool.shutdown(wait=False)
+                self._pool = None
         self.flush_metrics()
         # position 3 = on_close (middleware.py:129-137): sink flush hooks;
         # called with the committed store (not a row DataFrame)

@@ -2,7 +2,11 @@
 round and produces exactly the state of an uninterrupted run (SURVEY §5.4;
 reference analog: persistent crawl + shutdown put-back, crawler.py:558-638)."""
 
+import os
 import shutil
+import time
+
+import pytest
 
 from acrawler_spark.plans.engine import CrawlConfig, CrawlEngine
 from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
@@ -24,7 +28,8 @@ def _final_state(store):
         (r["round"], r["rank"], r["url_canon"])
         for r in store.read_appended("fetch_log").collect()
     }
-    return seen, items, sched
+    frontier = sorted(str(r.asDict(recursive=True)) for r in store.read_frontier().collect())
+    return seen, items, sched, frontier
 
 
 def test_kill_and_resume_identical(spark, tmp_path):
@@ -82,3 +87,79 @@ def test_bloom_sidecar_survives_resume(spark, tmp_path):
     log = e2.store.read_appended("fetch_log")
     per_url = log.groupBy("url_canon").count().filter("count > 1").count()
     assert per_url == 0  # nothing fetched twice (no recrawl configured)
+
+
+def test_crash_with_prefetch_in_flight_resumes_exactly(spark, tmp_path):
+    """The process dies in round 2's commit, after round 3's prefetched head
+    staged its pages delta and before the manifest bump. A resumed engine
+    drops the staged files of both uncommitted rounds, so a run that stops
+    at round 2 leaves no round-3 directory, and the crawl then finishes in
+    exactly the uninterrupted crawl's state."""
+    corpus = fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3)
+    s_full = CheckpointStore(str(tmp_path / "full"), spark)
+    CrawlEngine(spark, _cfg(), s_full).run(corpus)
+
+    root = str(tmp_path / "part")
+    store = CheckpointStore(root, spark)
+    e1 = CrawlEngine(spark, _cfg(), store)
+    commit = store.commit_round
+
+    def dying_commit(rnd, extra=None):
+        if rnd == 2:
+            e1._prefetch.fut.result()  # round 3's head staged its pages
+            raise RuntimeError("killed in round 2's commit")
+        commit(rnd, extra)
+
+    store.commit_round = dying_commit
+    pending = []
+    # a killed process retires nothing: the stub only waits for the job
+    e1.discard_prefetch = lambda: pending.append(e1._prefetch) or e1._prefetch.fut.result()
+    with pytest.raises(RuntimeError, match="killed"):
+        e1.run(corpus)
+    assert pending[0].rnd == 3
+    assert os.path.isdir(os.path.join(root, "pages", "delta_round=3"))
+
+    s_resume = CheckpointStore(root, spark)
+    assert s_resume.last_round == 1
+    CrawlEngine(spark, _cfg(), s_resume).run(corpus, max_rounds=2)
+    assert s_resume.last_round == 2
+    for stale in ("pages/delta_round=3", "frontier/round=3"):
+        assert not os.path.exists(os.path.join(root, stale)), stale
+
+    CrawlEngine(spark, _cfg(), s_resume).run(corpus)
+    assert _final_state(s_resume) == _final_state(s_full)
+    pf = pending[0]
+    e1._unpersist(pf.release + pf.fut.result().caches())
+
+
+def test_crash_mid_commit_waits_for_sibling_writes(spark, tmp_path):
+    """Round 2's lineage write fails at once while its seen write is still
+    running (it starts 3 s late). The failed commit waits for every write
+    it submitted: run() raises only after the seen delta is complete, the
+    manifest stays at round 1, and a fresh engine resumes to exactly the
+    uninterrupted crawl's state."""
+    corpus = fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3)
+    s_full = CheckpointStore(str(tmp_path / "full"), spark)
+    CrawlEngine(spark, _cfg(), s_full).run(corpus)
+
+    root = str(tmp_path / "part")
+    store = CheckpointStore(root, spark)
+    write_delta = store.write_delta
+
+    def slow_seen_failing_lineage(table, rnd, df, **kw):
+        if rnd == 2 and table == "seen":
+            time.sleep(3)
+        if rnd == 2 and table == "lineage":
+            raise RuntimeError("lineage write failed")
+        write_delta(table, rnd, df, **kw)
+
+    store.write_delta = slow_seen_failing_lineage
+    with pytest.raises(RuntimeError, match="lineage write failed"):
+        CrawlEngine(spark, _cfg(), store).run(corpus, max_rounds=2)
+    assert os.path.exists(os.path.join(root, "seen", "delta_round=2", "_SUCCESS")), (
+        "run() raised while the seen write was still running"
+    )
+    s_resume = CheckpointStore(root, spark)
+    assert s_resume.last_round == 1
+    CrawlEngine(spark, _cfg(), s_resume).run(corpus)
+    assert _final_state(s_resume) == _final_state(s_full)

@@ -476,13 +476,16 @@ def test_pipelined_rounds_report_mode(spark, tmp_path, crawl):
     assert_match(spark, store, history, expected)
 
 
-def test_failed_prefetch_releases_caches_and_staged_files(spark, tmp_path):
-    """A prefetch whose pages job fails leaves nothing behind. Round 2's
-    pages job stages its delta and then fails, only inside the prefetch
-    round 1's commit launched: run() raises, no round-2 pages delta is
-    left, the manifest ends at round 1, and every DataFrame the crawl
-    cached (the launching round's caches handed to the prefetch, and the
-    prefetch's own selection) is unpersisted."""
+@pytest.mark.parametrize("where", ["prefetch", "inline"])
+def test_failed_prefetch_releases_caches_and_staged_files(spark, tmp_path, where):
+    """A round head whose pages job fails leaves nothing behind, whichever
+    thread ran it. ``prefetch``: round 2's pages job stages its delta and
+    then fails, only inside the prefetch round 1's commit launched.
+    ``inline``: round 1's pages job does the same on the main thread. run()
+    raises, no pages delta of the failed round is left, the manifest ends
+    at the round before it, and every DataFrame the crawl cached (the
+    launching round's caches handed to the prefetch, and the failed head's
+    own selection) is unpersisted."""
     import os
     import threading
 
@@ -495,24 +498,95 @@ def test_failed_prefetch_releases_caches_and_staged_files(spark, tmp_path):
     store = CheckpointStore(str(tmp_path / "s"), spark)
     e = CrawlEngine(spark, cfg, store)
     pages_job = e._run_pages_job
+    fail_rnd = 2 if where == "prefetch" else 1
 
-    def failing_in_prefetch(rnd, *args):
+    def failing_pages_job(rnd, *args):
         out = pages_job(rnd, *args)
-        if rnd == 2 and threading.current_thread() is not threading.main_thread():
-            raise RuntimeError("injected prefetch failure")
+        on_main = threading.current_thread() is threading.main_thread()
+        if rnd == fail_rnd and on_main == (where == "inline"):
+            raise RuntimeError(f"injected {where} failure")
         return out
 
-    e._run_pages_job = failing_in_prefetch
+    e._run_pages_job = failing_pages_job
     jsc = spark.sparkContext._jsc
     cached_before = set(jsc.getPersistentRDDs().keys())
-    with pytest.raises(RuntimeError, match="injected prefetch failure"):
+    with pytest.raises(RuntimeError, match=f"injected {where} failure"):
         e.run(corpus)
-    assert store.last_round == 1
+    assert store.last_round == fail_rnd - 1
     assert not os.path.exists(
-        os.path.join(str(tmp_path / "s"), "pages", "delta_round=2")
-    ), "failed prefetch left staged files"
+        os.path.join(str(tmp_path / "s"), "pages", f"delta_round={fail_rnd}")
+    ), f"failed {where} head left staged files"
     leaked = set(jsc.getPersistentRDDs().keys()) - cached_before
     assert not leaked, f"{len(leaked)} cached RDDs outlived the failed crawl"
+
+
+def _crawl_state(store) -> dict:
+    """Everything a crawl leaves in its store, in comparable form."""
+    from tests.test_engine_e2e import schedule_of
+
+    def rows(df):
+        return sorted(str(r.asDict(recursive=True)) for r in df.collect())
+
+    return {
+        "schedule": schedule_of(store),
+        "seen": {r["fingerprint"] for r in store.read_appended("seen").collect()},
+        "robots_blocked": {
+            (r["url"], r["round"]) for r in store.read_appended("robots_blocked").collect()
+        },
+        "failed": sorted(r["url_canon"] for r in store.read_appended("failed").collect()),
+        "items": {
+            r["url"]: r["extracted_text"] for r in store.read_appended("items").collect()
+        },
+        "frontiers": [rows(store.read_frontier(n)) for n in range(store.last_round + 1)],
+    }
+
+
+def test_inline_and_prefetched_rounds_leave_the_same_state(spark, tmp_path):
+    """A crawl with a robots disallow subtree, a Crawl-delay, followed links
+    and dead links (404 retries) leaves the same store whether run()
+    pipelines it (every round after the first claims a prefetched head) or
+    direct run_round calls run every round inline: per-round schedules,
+    seen set, robots_blocked (url, round) rows, failed set, items text and
+    every round's committed frontier."""
+    from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
+
+    corpus = fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3)
+    cfg = CrawlConfig(
+        seeds=seed_urls(2),
+        follow_patterns=[r"site\d+\.test"],
+        bloom_bits=1 << 14,
+        # site0 disallows the /p/1 subtree (/p/1, /p/10-12); site1's
+        # Crawl-delay of 0.5 s caps it at 2 fetches per 1 s round
+        robots_rules={
+            "site0.test": {"disallow": ["/p/1"]},
+            "site1.test": {"crawl_delay": 0.5},
+        },
+    )
+
+    piped = CheckpointStore(str(tmp_path / "piped"), spark)
+    piped_modes = [h["timing"]["mode"] for h in CrawlEngine(spark, cfg, piped).run(corpus)]
+
+    inline = CheckpointStore(str(tmp_path / "inline"), spark)
+    e = CrawlEngine(spark, cfg, inline)
+    e.bootstrap()
+    inline_modes = []
+    while e._frontier_stats()[0] > 0:
+        assert inline.last_round < 50, "direct rounds did not converge"
+        inline_modes.append(
+            e.run_round(inline.last_round + 1, corpus)["timing"]["mode"]
+        )
+
+    assert len(piped_modes) >= 4
+    assert piped_modes[0] == "inline" and set(piped_modes[1:]) == {"prefetch"}
+    assert set(inline_modes) == {"inline"}
+    got, want = _crawl_state(piped), _crawl_state(inline)
+    assert got["robots_blocked"] and got["failed"], "crawl missed the robots/retry paths"
+    site1_per_round = [
+        sum("site1.test" in u for u in urls) for urls in got["schedule"].values()
+    ]
+    assert max(site1_per_round) == 2, site1_per_round
+    for key in want:
+        assert got[key] == want[key], key
 
 
 def test_exact_substring_dedup_windows(spark, tmp_path):
