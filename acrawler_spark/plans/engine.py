@@ -19,9 +19,9 @@ parse + counters via observe), (2) seen delta with the Bloom build fused
 into its write, (3) frontier rewrite as a broadcast anti-join (windows run
 once) carrying next-round due stats in the manifest. Under AQE each query
 stage of an action is submitted as its own Spark job, so the job count is
-several times higher (a one-round polite crawl submits ~44). items /
-fetch_log / failed are virtual projections of the pages delta
-(plans/views.py); metrics materialize once per crawl from the manifest.
+several times higher. items / fetch_log / failed / lineage are views of the
+pages deltas and metrics a view of the manifest (plans/views.py): a crawl
+writes only its own state.
 
 Determinism contract (tests/oracle.py mirrors it 1:1): logical clock
 now = t0 + round; total order (priority DESC, exetime ASC, fingerprint ASC);
@@ -50,7 +50,7 @@ from acrawler_spark.operators.politeness import (
     global_schedule_rank,
     rank_keys,
 )
-from acrawler_spark.plans.views import fetch_log_view, items_view
+from acrawler_spark.plans.views import items_view
 from acrawler_spark.session import local_frame
 from acrawler_spark.sources.store import CheckpointStore
 
@@ -70,7 +70,6 @@ class CrawlConfig:
     round_seconds: float = 1.0  # logical wall-time per round
     round_cap: int | None = None  # global per-round fetch cap (MAX_REQUESTS quantized)
     status_allowed: list[int] | None = None  # None => only 200 ok; [] => all ok (http.py:270-281)
-    links_to_abs: bool = True
     seed_recrawl: int = 0  # task.recrawl for seeds (crawler.py:122-126)
     max_depth: int | None = None
     max_rounds: int = 1000
@@ -78,7 +77,6 @@ class CrawlConfig:
     use_bloom: bool = True
     bloom_buckets: int = 16
     bloom_bits: int = 1 << 20
-    detailed_metrics: bool = True  # write the per-round lineage delta (one extra write job)
     seeds_inbox: str | None = None  # drop-dir seed ingestion (redis feeder analog)
     robots_rules: dict | None = None  # {host: {"disallow": [...], "crawl_delay": s}}
     # corpus bucket layout (Iceberg bucket(url) analog): when set and the
@@ -314,7 +312,7 @@ class CrawlEngine:
             if cfg.use_bloom
             else None
         )
-        self._parse_udf = make_parse_page_udf(cfg.links_to_abs, cfg.follow_patterns)
+        self._parse_udf = make_parse_page_udf(True, cfg.follow_patterns)
         if cfg.seeds_inbox:
             from acrawler_spark.streaming.seeds import SeedFeeder
 
@@ -347,11 +345,11 @@ class CrawlEngine:
 
     def _submit(self, fn, *args) -> Future:
         """The engine's one executor runs the commit's concurrent writes (at
-        most five) and the next round's head. Whoever submits a future waits
+        most four) and the next round's head. Whoever submits a future waits
         on it (the commit in a ``finally``, a prefetch's claim or discard);
         ``run()`` shuts the executor down on its way out."""
         if self._pool is None:
-            self._pool = ThreadPoolExecutor(max_workers=6)
+            self._pool = ThreadPoolExecutor(max_workers=5)
         return self._pool.submit(fn, *args)
 
     @contextmanager
@@ -416,7 +414,7 @@ class CrawlEngine:
         )
         if self.bloom is not None:
             seen0 = self.bloom.updating_scan(seen0)
-        self.store.write_delta("seen", 0, seen0, cap=self.bloom is None)
+        self.store.write_delta("seen", 0, seen0)
         self.store.commit_round(
             0,
             {"phase": "bootstrap", "seeds": len(cfg.seeds),
@@ -959,12 +957,12 @@ class CrawlEngine:
         Per-round action budget (VERDICT r1 scaling fix): THREE write
         actions in the steady state — pages stage, seen (+Bloom fused),
         frontier; AQE runs each query stage of an action as its own Spark
-        job — and the seen/frontier writes (plus optional spec-items /
-        lineage) are SUBMITTED CONCURRENTLY from driver threads, so their
+        job — and the seen/frontier writes (plus the optional spec-items
+        write) are SUBMITTED CONCURRENTLY from driver threads, so their
         per-stage scheduling latencies overlap instead of serializing.
-        items/fetch_log/failed are virtual projections of the pages delta;
-        every counter rides a write via observe(); nothing is counted with
-        a standalone action."""
+        items/fetch_log/failed/lineage are views of the pages deltas and
+        metrics a view of the manifest; every counter rides a write via
+        observe(); nothing is counted with a standalone action."""
         cfg, rnd, now = self.cfg, st.rnd, st.now
         cols = st.frontier.columns
         # admitted is the empty literal when nothing can be admitted
@@ -1005,7 +1003,7 @@ class CrawlEngine:
             if self.bloom is not None:
                 new_seen = self.bloom.updating_scan(new_seen)
             with self._job(f"r{rnd} seen: dedup+bloom+write (materializes admitted)"):
-                self.store.write_delta("seen", rnd, new_seen, cap=self.bloom is None)
+                self.store.write_delta("seen", rnd, new_seen)
             got = obs_seen.get
             return int(got["n"] or 0) - int(got["n_seed"] or 0)
 
@@ -1050,23 +1048,6 @@ class CrawlEngine:
             with self._job(f"r{rnd} items: spec extraction write"):
                 self.store.write_delta("items", rnd, st.spec_items)
 
-        def _lineage_job() -> None:
-            # per-partition lineage (north rule) — gated: observability,
-            # not crawl state. Metrics rows live in the commit manifest and
-            # are materialized once per crawl by flush_metrics().
-            lineage = (
-                fetch_log_view(st.pages)
-                .groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.sum(F.col("ok").cast("long")).alias("n_ok"),
-                    F.sum("bytes").alias("bytes"),
-                )
-                .withColumn("round", F.lit(rnd))
-            )
-            with self._job(f"r{rnd} lineage: partition rollup write"):
-                self.store.write_delta("lineage", rnd, lineage)
-
         # The admitted cache must be materialized by exactly ONE job before
         # any second consumer touches it: submitting two consumers with a
         # cold cache makes every task of one convoy on the other's
@@ -1074,7 +1055,7 @@ class CrawlEngine:
         # partitions (event-log evidence at local[16], bench round 1: two
         # identical 32-task stages — candidates Window + Bloom MapInPandas
         # + Union lineage — 448 task-seconds of run time against 49 CPU-
-        # seconds, ~90% lock-wait). items/lineage/frontier-core read only
+        # seconds, ~90% lock-wait). items/frontier-core read only
         # the staged deltas and the prior frontier (all written by the
         # fetch phase) — they never touch admitted,
         # so they run beside the materializer; the seen write and the
@@ -1090,17 +1071,13 @@ class CrawlEngine:
         try:
             fut_cache = submit(_cache_job)
             fut_fcore = submit(_frontier_core_job)
-            extras = []
-            if st.spec_items is not None:
-                extras.append(submit(_items_job))
-            if cfg.detailed_metrics:
-                extras.append(submit(_lineage_job))
+            extras = [submit(_items_job)] if st.spec_items is not None else []
             n_adm_cached = fut_cache.result()
             fut_seen = submit(_seen_job)  # hot cache: bloom + write tail
             core = fut_fcore.result()
             # both parts of the next frontier are counted: round rnd+1's
             # prefetch overlaps the admitted append, the seen tail and the
-            # extras
+            # spec-items write
             self._launch_prefetch(st, core, n_adm_cached, max_round)
             adm = _frontier_admitted_job()
             for f in as_completed([fut_seen, *extras]):
@@ -1151,27 +1128,6 @@ class CrawlEngine:
         m = self.store.read_manifest()
         stats = m["rounds"][str(self.store.last_round)]
         return int(stats["frontier_n"]), stats["frontier_min_exetime"]
-
-    def flush_metrics(self) -> None:
-        """Materialize the metrics table from the commit manifest (the
-        durable per-round record): one overwrite of a fixed delta per crawl
-        instead of one write job per round. Idempotent across resumes."""
-        m = self.store.read_manifest()
-        rows = [
-            (int(rnd_s), "Request", None, st["ok"], st["failed"], st["retried"],
-             st["deferred"], st["admitted"], st["selected"], int(st.get("wall_ms", 0)))
-            for rnd_s, st in m.get("rounds", {}).items()
-            if "selected" in st
-        ]
-        if not rows:
-            return
-        metrics = local_frame(
-            self.spark,
-            sorted(rows),
-            "round int, family string, host string, success long, fail long, "
-            "retried long, rescheduled long, admitted long, selected long, wall_ms long",
-        )
-        self.store.write_delta("metrics", 0, metrics)
 
     def run(
         self,
@@ -1246,7 +1202,6 @@ class CrawlEngine:
                 # the claim, the discard above): nothing is left to wait for
                 self._pool.shutdown(wait=False)
                 self._pool = None
-        self.flush_metrics()
         # position 3 = on_close (middleware.py:129-137): sink flush hooks;
         # called with the committed store (not a row DataFrame)
         for entry in sorted(cfg.handlers.get("on_close", []), key=lambda x: -x[0]):

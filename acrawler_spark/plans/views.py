@@ -1,13 +1,14 @@
-"""Derived round tables — column-pruned projections of the `pages` delta.
+"""Derived tables — views of the `pages` deltas and of the commit manifest.
 
 The staged ``pages`` delta is the round's single materialized page-level
 result (fetch status + parsed text + links, html dropped). ``items``,
-``fetch_log`` and ``failed`` are pure projections of it, so they are never
-rewritten to disk: the store serves them as *virtual tables* — a scan of
-the pages deltas with column pruning (parquet reads only the projected
-columns). This removes two to three write jobs per round and avoids
-writing the extracted text twice (items used to duplicate the round's
-largest payload byte-for-byte).
+``fetch_log``, ``failed`` and ``lineage`` are projections or rollups of it,
+so they are never written to disk: the store serves them as *virtual
+tables* — a scan of the pages deltas with column pruning (parquet reads
+only the projected columns). ``metrics`` is a view of the manifest's
+per-round counters. A round writes only crawl state, and avoids writing
+the extracted text twice (items used to duplicate the round's largest
+payload byte-for-byte).
 
 Only rows that are NOT pure projections are materialized: per-family
 ItemSpec extractions append physical ``items`` deltas, which the store
@@ -20,8 +21,10 @@ final_fail computed at stage time — so the views are config-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from acrawler_spark.session import local_frame
 
 
 def items_view(pages: DataFrame) -> DataFrame:
@@ -74,8 +77,45 @@ def failed_view(pages: DataFrame) -> DataFrame:
     )
 
 
+def lineage_view(pages: DataFrame) -> DataFrame:
+    """Per-partition lineage (north rule): fetches, successes and bytes per
+    (round, scan partition); a round's ``n_rows`` sum to its selected set."""
+    return (
+        fetch_log_view(pages)
+        .groupBy(F.spark_partition_id().alias("partition_id"), "round")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.sum(F.col("ok").cast("long")).alias("n_ok"),
+            F.sum("bytes").alias("bytes"),
+        )
+        .select("partition_id", "n_rows", "n_ok", "bytes", "round")
+    )
+
+
+METRICS_SCHEMA = (
+    "round int, family string, host string, success long, fail long, "
+    "retried long, rescheduled long, admitted long, selected long, wall_ms long"
+)
+
+
+def metrics_view(spark: SparkSession, manifest: dict, upto: int) -> DataFrame | None:
+    """One row per committed crawl round ≤ ``upto``, from the counters its
+    manifest entry carries (the bootstrap entry has none). None before the
+    first round commits."""
+    rows = sorted(
+        (int(rnd_s), "Request", None, st["ok"], st["failed"], st["retried"],
+         st["deferred"], st["admitted"], st["selected"], int(st.get("wall_ms", 0)))
+        for rnd_s, st in manifest.get("rounds", {}).items()
+        if "selected" in st and int(rnd_s) <= upto
+    )
+    return local_frame(spark, rows, METRICS_SCHEMA) if rows else None
+
+
+# the views read_appended serves over the pages deltas ("metrics", a view
+# of the manifest, is served by metrics_view)
 VIRTUAL_TABLES = {
     "items": items_view,
     "fetch_log": fetch_log_view,
     "failed": failed_view,
+    "lineage": lineage_view,
 }

@@ -10,8 +10,11 @@ same scale properties Iceberg would give:
   partitioning — no rewrite of the big table ever happens.
 * ``frontier`` is bounded (the active crawl horizon), so it is rewritten
   per round (Iceberg: copy-on-write MERGE).
-* ``items`` / ``fetch_log`` / ``metrics`` / ``lineage`` are append-only
-  round deltas.
+* ``pages`` (the round's fetched and parsed pages), ``robots_blocked`` and
+  the ItemSpec ``items`` rows are append-only round deltas.
+* ``items`` / ``fetch_log`` / ``failed`` / ``lineage`` are views of the
+  pages deltas and ``metrics`` a view of the manifest (plans/views.py):
+  no round writes them.
 * the manifest (``_manifest.json``) is committed atomically (tmp + rename),
   so a job killed mid-round resumes from the last fully-committed round —
   the in-flight round simply re-runs (reference analog: crawler.py:558-638
@@ -30,25 +33,16 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-APPEND_TABLES = (
-    "seen", "items", "fetch_log", "metrics", "lineage", "failed",
-    "robots_blocked", "pages",
-)
+APPEND_TABLES = ("seen", "items", "pages", "robots_blocked")
 REWRITE_TABLES = ("frontier",)
 
 MANIFEST = "_manifest.json"
 
 
 class CheckpointStore:
-    def __init__(self, root: str, spark: SparkSession, write_partitions: int | None = None):
-        """``write_partitions`` coalesces every table write to at most that
-        many files — the local-mode stand-in for Iceberg's target-file-size
-        compaction. Round tables are small relative to the cluster's task
-        count, so uncapped writes produce swarms of tiny files whose
-        open/close overhead dominates small rounds."""
+    def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
-        self.write_partitions = write_partitions
         os.makedirs(root, exist_ok=True)
 
     # -- manifest -----------------------------------------------------------
@@ -83,32 +77,12 @@ class CheckpointStore:
 
     # -- write (staged; becomes visible only at commit_round) ----------------
 
-    # tables whose rows carry page text: never shuffled for the write. The
-    # fetch join broadcasts the bounded selected side, so the pages job is
-    # scan -> join -> parse -> write in ONE stage; a rebalance/repartition
-    # here would push the round's largest payload (decompressed text)
-    # through shuffle disk twice — memory-bandwidth-bound work that scales
-    # with nothing. Upstream partitioning (scan splits) already bounds file
-    # sizes; AQE's rebalance also missizes these ~50:1-compressible rows.
-    BIG_PAYLOAD = ("pages", "items")
-
-    def _capped(self, df: DataFrame, table: str | None = None) -> DataFrame:
-        if self.write_partitions is None:
-            return df
-        if table in self.BIG_PAYLOAD:
-            return df
-        # small/metadata tables: AQE rebalance — tiny round deltas coalesce
-        # to one file instead of `write_partitions` near-empty files whose
-        # open/footer overhead was a serial per-round cost
-        return df.hint("rebalance")
-
-    def write_delta(self, table: str, rnd: int, df: DataFrame, cap: bool = True) -> None:
-        """``cap=False`` writes the DataFrame's own partitioning verbatim —
-        used when the plan is already partition-owned (e.g. the seen delta
-        rides the Bloom bucket layout)."""
+    def write_delta(self, table: str, rnd: int, df: DataFrame) -> None:
+        """Write the DataFrame's own partitioning verbatim: pages rows carry
+        page text and stream out of the fetch join's one stage, and the seen
+        delta rides the Bloom bucket layout."""
         assert table in APPEND_TABLES, table
-        d = self._capped(df, table) if cap else df
-        d.write.mode("overwrite").parquet(self._delta_path(table, rnd))
+        df.write.mode("overwrite").parquet(self._delta_path(table, rnd))
 
     def append_delta(self, table: str, rnd: int, df: DataFrame) -> None:
         """Append a second file set into an already-staged round delta
@@ -170,27 +144,29 @@ class CheckpointStore:
         any). At Iceberg scale this is a single partitioned-table scan;
         here an explicit multi-path parquet read.
 
-        ``items`` / ``fetch_log`` / ``failed`` are **virtual**: projections
-        of the pages deltas (plans/views.py), unioned with any physical
-        deltas of the same name (ItemSpec extractions). They cost zero
-        write jobs per round and read only their projected columns."""
-        from acrawler_spark.plans.views import VIRTUAL_TABLES
+        ``items`` / ``fetch_log`` / ``failed`` / ``lineage`` are **virtual**:
+        views of the pages deltas (plans/views.py); ``items`` also unions
+        the physical ItemSpec deltas. ``metrics`` is a view of the manifest's
+        round entries. None of them costs a write job."""
+        from acrawler_spark.plans.views import VIRTUAL_TABLES, metrics_view
 
-        if table in VIRTUAL_TABLES:
-            base = self.read_appended("pages", upto_round)
-            virtual = VIRTUAL_TABLES[table](base) if base is not None else None
-            physical = self._read_appended_physical(table, upto_round)
-            if virtual is None:
-                return physical
-            if physical is None:
-                return virtual
-            return virtual.unionByName(physical, allowMissingColumns=True)
-        return self._read_appended_physical(table, upto_round)
-
-    def _read_appended_physical(
-        self, table: str, upto_round: int | None = None
-    ) -> DataFrame | None:
         upto = self.last_round if upto_round is None else upto_round
+        if table == "metrics":
+            return metrics_view(self.spark, self.read_manifest(), upto)
+        if table not in VIRTUAL_TABLES:
+            return self._read_appended_physical(table, upto)
+        pages = self._read_appended_physical("pages", upto)
+        view = VIRTUAL_TABLES[table](pages) if pages is not None else None
+        if table != "items":
+            return view
+        specs = self._read_appended_physical("items", upto)
+        if specs is None:
+            return view
+        if view is None:
+            return specs
+        return view.unionByName(specs, allowMissingColumns=True)
+
+    def _read_appended_physical(self, table: str, upto: int) -> DataFrame | None:
         m = self.read_manifest()
         base_round = m.get("compacted", {}).get(table, -1)
         paths = []
@@ -229,7 +205,7 @@ class CheckpointStore:
         df = self.read_appended(table, upto)
         if df is None:
             return
-        self._capped(df).write.mode("overwrite").parquet(self._compact_path(table, upto))
+        df.write.mode("overwrite").parquet(self._compact_path(table, upto))
         m = self.read_manifest()
         m.setdefault("compacted", {})[table] = upto
         self._write_manifest(m)

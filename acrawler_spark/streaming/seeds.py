@@ -2,11 +2,12 @@
 
 Reference: handlers.py:282-293 loops SPOP on REDIS_START_KEY and wraps each
 url as a Request; utils.py:164-188 is the external producer. The batch
-engine's equivalent is a drop-directory: external producers write files of
-urls (one per line, or parquet with a ``url`` column) into a seeds inbox;
-between rounds the engine drains the inbox, canonicalizes/fingerprints the
-urls, admits them through the same dupefilter path as followed links, and
-moves the consumed files aside. The reference's lock_always/redis mode
+engine's equivalent is a drop-directory: external producers write text
+files of urls, one per line, into a seeds inbox (``push_start_urls`` drops
+one atomically). Every file is read as text lines, so only text files may
+be dropped there. Between rounds the engine drains the inbox,
+canonicalizes/fingerprints the urls, admits them through the same
+dupefilter path as followed links, and moves the consumed files aside. The reference's lock_always/redis mode
 (crawler.py:423-429: never terminate, keep polling) maps to running the
 round loop with ``max_rounds`` unbounded while an inbox exists.
 

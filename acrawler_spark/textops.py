@@ -617,7 +617,10 @@ def _spread(df: DataFrame) -> DataFrame:
     (a real multi-split corpus at scale) the repartition is skipped outright:
     shuffling a wide scan DOWN to core count would pay a full-input exchange
     only to reduce parallelism. Output is partition-layout-independent either
-    way (verified old-vs-new at every test SF)."""
+    way (verified old-vs-new at every test SF).
+
+    Wrap scan-level inputs only: under AQE, ``getNumPartitions()`` on a
+    shuffled input runs that input's stages eagerly."""
     width = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= width:
         return df

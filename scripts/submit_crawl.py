@@ -62,8 +62,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="corpus bucket(url) partition count for DPP (Iceberg bucket analog)")
     p.add_argument("--seeds-inbox", default=None,
                    help="drop-dir for between-round seed ingestion (redis feeder analog)")
-    p.add_argument("--write-partitions", type=int, default=None,
-                   help="files per store delta write (default: session shuffle width)")
     return p
 
 
@@ -99,7 +97,7 @@ def main(argv: list[str] | None = None) -> int:
     from acrawler_spark.sources.store import CheckpointStore
 
     corpus = spark.read.parquet(args.corpus)
-    store = CheckpointStore(args.store, spark, write_partitions=args.write_partitions)
+    store = CheckpointStore(args.store, spark)
     resumed_from = store.last_round
     if resumed_from < 0 and not seeds and not args.seeds_inbox:
         print("error: a fresh store needs --seeds/--seeds-file or --seeds-inbox",
@@ -120,7 +118,6 @@ def main(argv: list[str] | None = None) -> int:
         bloom_bits=args.bloom_bits,
         corpus_bucket_n=args.corpus_bucket_n,
         seeds_inbox=args.seeds_inbox,
-        detailed_metrics=False,
     )
     t0 = time.monotonic()
     history = CrawlEngine(spark, cfg, store).run(corpus)

@@ -96,8 +96,7 @@ def test_unbounded_crawl_matches_oracle(spark, tmp_path):
     for d in deltas:
         files = [f for f in os.listdir(os.path.join(seen_root, d)) if f.endswith(".parquet")]
         assert len(files) <= width, (d, files)
-    # the lineage rollup (detailed_metrics, on by default) accounts for
-    # every fetch of its round exactly once
+    # the lineage view accounts for every fetch of its round exactly once
     lineage = store.read_appended("lineage").groupBy("round").agg(F.sum("n_rows").alias("n"))
     assert {r["round"]: r["n"] for r in lineage.collect()} == {
         h["round"]: h["selected"] for h in history
@@ -142,15 +141,27 @@ def test_round_cap_matches_oracle(spark, tmp_path):
 
 def test_no_bloom_same_result(spark, tmp_path):
     e1 = run_both(spark, tmp_path / "a", use_bloom=True)
-    e2 = run_both(spark, tmp_path / "b", use_bloom=False, detailed_metrics=False)
+    e2 = run_both(spark, tmp_path / "b", use_bloom=False)
     assert e1[3].schedule == e2[3].schedule  # same oracle
     s1 = {r["fingerprint"] for r in e1[1].read_appended("seen").collect()}
     s2 = {r["fingerprint"] for r in e2[1].read_appended("seen").collect()}
     assert s1 == s2
-    # detailed_metrics=False writes no lineage delta in any round
-    assert e1[1].read_appended("lineage") is not None
-    assert e2[1].read_appended("lineage") is None
-    assert not os.path.exists(os.path.join(e2[1].root, "lineage"))
+
+    # lineage and metrics are views: neither finished crawl wrote them, and
+    # both read the same per-round rollups and counters with or without
+    # the Bloom
+    def views(store):
+        for table in ("lineage", "metrics"):
+            assert not os.path.exists(os.path.join(store.root, table)), table
+        lineage = store.read_appended("lineage").groupBy("round").agg(
+            F.sum("n_rows").alias("n"), F.sum("n_ok").alias("ok"), F.sum("bytes").alias("b")
+        )
+        metrics = store.read_appended("metrics").drop("wall_ms")
+        return sorted(map(tuple, lineage.collect())), sorted(map(tuple, metrics.collect()))
+
+    lineage1, metrics1 = views(e1[1])
+    assert (lineage1, metrics1) == views(e2[1])
+    assert [m[0] for m in metrics1] == [h["round"] for h in e1[2]]
 
 
 def test_recrawl_reenqueues(spark, tmp_path):

@@ -133,28 +133,32 @@ def test_crash_with_prefetch_in_flight_resumes_exactly(spark, tmp_path):
 
 
 def test_crash_mid_commit_waits_for_sibling_writes(spark, tmp_path):
-    """Round 2's lineage write fails at once while its seen write is still
-    running (it starts 3 s late). The failed commit waits for every write
-    it submitted: run() raises only after the seen delta is complete, the
-    manifest stays at round 1, and a fresh engine resumes to exactly the
-    uninterrupted crawl's state."""
+    """Round 2's frontier-core write fails at once while its seen write is
+    still running (it starts 3 s late). The failed commit waits for every
+    write it submitted: run() raises only after the seen delta is complete,
+    the manifest stays at round 1, and a fresh engine resumes to exactly
+    the uninterrupted crawl's state."""
     corpus = fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3)
     s_full = CheckpointStore(str(tmp_path / "full"), spark)
     CrawlEngine(spark, _cfg(), s_full).run(corpus)
 
     root = str(tmp_path / "part")
     store = CheckpointStore(root, spark)
-    write_delta = store.write_delta
+    write_delta, write_frontier = store.write_delta, store.write_frontier
 
-    def slow_seen_failing_lineage(table, rnd, df, **kw):
+    def slow_seen(table, rnd, df):
         if rnd == 2 and table == "seen":
             time.sleep(3)
-        if rnd == 2 and table == "lineage":
-            raise RuntimeError("lineage write failed")
-        write_delta(table, rnd, df, **kw)
+        write_delta(table, rnd, df)
 
-    store.write_delta = slow_seen_failing_lineage
-    with pytest.raises(RuntimeError, match="lineage write failed"):
+    def failing_frontier_core(rnd, df):
+        if rnd == 2:
+            raise RuntimeError("frontier core write failed")
+        write_frontier(rnd, df)
+
+    store.write_delta = slow_seen
+    store.write_frontier = failing_frontier_core
+    with pytest.raises(RuntimeError, match="frontier core write failed"):
         CrawlEngine(spark, _cfg(), store).run(corpus, max_rounds=2)
     assert os.path.exists(os.path.join(root, "seen", "delta_round=2", "_SUCCESS")), (
         "run() raised while the seen write was still running"
