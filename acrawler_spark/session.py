@@ -15,16 +15,35 @@ from pyspark.sql import types as T
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+# JIT profile of the driver JVM, which in local mode also runs every
+# executor task. A crawl JVM is short-lived next to the servers HotSpot's
+# tier-4 (C2) thresholds are tuned for: with the JDK 17 defaults (5000
+# invocations, 40000 loop back-edges) a cold one-round crawl spends about
+# half of its thread CPU in the C1/C2 compiler threads, mostly C2-compiling
+# planner, codegen and task code that runs a few more times at most. The
+# thresholds below (invocation and back-edge 20x the defaults, the
+# min-invocation and combined thresholds raised with them) keep such code in
+# C1 and leave C2 to code that is really hot, which a long crawl still
+# reaches. C1-only (TieredStopAtLevel=1) is cheaper still for one round, but
+# a 34-round warm crawl then used more CPU and up to 2x the wall time
+# (SCALING.md, "JVM compile profile").
+# defaultJavaOptions, not extraJavaOptions: Spark prepends it to
+# extraJavaOptions, which callers set themselves (perfbench puts
+# java.io.tmpdir there) and which would otherwise replace these flags.
+DRIVER_JIT_FLAGS = (
+    "-XX:Tier4InvocationThreshold=100000",
+    "-XX:Tier4MinInvocationThreshold=40000",
+    "-XX:Tier4CompileThreshold=120000",
+    "-XX:Tier4BackEdgeThreshold=800000",
+)
+
+
 def get_spark(
     app_name: str = "acrawler_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+    master: str = "local[*]",
+    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("ACRAWLER_SPARK_MASTER", "local[*]")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("ACRAWLER_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -93,6 +112,7 @@ def get_spark(
         .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("ACRAWLER_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", " ".join(DRIVER_JIT_FLAGS))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -16,6 +16,22 @@ requires (map-key dedup policy, Arrow) — master, executor sizing, and
 shuffle width come from spark-submit, which is the whole point of the
 entrypoint: the same file runs on local[N] and on a 1000-executor cluster.
 
+That includes the driver JVM's JIT profile (``session.DRIVER_JIT_FLAGS``):
+spark-submit starts the JVM before this script runs, so ``get_spark``'s
+profile never reaches a submitted crawl. A short local crawl
+(``--master local[N]``, where the driver JVM runs every task) passes it
+itself::
+
+    spark-submit --master 'local[4]' \
+        --conf 'spark.driver.defaultJavaOptions=-XX:Tier4InvocationThreshold=100000
+            -XX:Tier4MinInvocationThreshold=40000 -XX:Tier4CompileThreshold=120000
+            -XX:Tier4BackEdgeThreshold=800000' \
+        ...
+
+(one line in practice). Cluster executors keep the JVM defaults: they are
+long-lived, so C2's compile cost is paid once and earned back over many
+rounds and tasks.
+
 fetch_log's ``rank`` is always the exact per-round schedule rank: the
 order ``tests/oracle.py`` pins, and the order in which a round's
 discovered links are deduplicated (first discovered wins).
