@@ -57,46 +57,46 @@ def budget_col(host, uniform: int, special: dict[str, int]):
     return F.coalesce(expr, uniform_budget)
 
 
-def global_schedule_rank(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Exact global schedule rank (1-based, frontier total order) without a
-    single-partition Window over the data: range-partition on the sort
-    keys, row_number within each range, add per-range cumulative offsets.
-    Safe for unbounded selected sets — no straggler partition at any scale.
+def range_partition(df: DataFrame) -> DataFrame:
+    """``df`` range-partitioned on the frontier total order, each row
+    tagged with its range (``_pid``): every row of range p sorts before
+    every row of range p+1. The engine stages this once (the round's
+    ``selected`` delta); ``global_schedule_rank`` ranks the staged rows."""
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartitionByRange(n_parts, *rank_keys()).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+
+
+def global_schedule_rank(d: DataFrame) -> DataFrame:
+    """Exact global schedule rank (1-based, frontier total order) of rows
+    carrying their range ``_pid`` (``range_partition``) without a
+    single-partition Window over the data: row_number within each range,
+    plus per-range cumulative offsets. Safe for unbounded selected sets —
+    no straggler partition at any scale.
 
     The offsets are NOT collected to the driver: they are a lazy
     ``groupBy(_pid).count`` + cumulative-sum subplan (metadata-sized —
     n_partitions rows; its single-partition window is over partition
     COUNTS, not data) broadcast-joined back. The whole rank is therefore
     one lazy plan fused into whichever job consumes it — zero extra
-    driver actions per round (VERDICT r2 #6). Offset/row alignment is
-    safe under cache loss: the range boundaries live in the shuffle's
-    Partitioner object, which recomputation of lost cached partitions
-    reuses — both the counts subplan and the main scan read the same
-    persisted exchange.
-
-    Returns ``(ranked, cache_handle)``; the caller unpersists the handle
-    after the round's jobs finish. ``rank`` is a long (a 10^10-row
-    frontier overflows int).
+    driver actions per round (VERDICT r2 #6). ``_pid`` is a column of
+    ``d``, so both reads of it (counts and rows) agree whatever re-reads
+    or recomputes ``d``: a staged file set needs no cache. ``rank`` is a
+    long (a 10^10-row frontier overflows int).
     """
     keys = rank_keys()
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    d = (
-        df.repartitionByRange(n_parts, *keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
     counts = d.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
         "_pid", F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off")
     )
     w = Window.partitionBy("_pid").orderBy(*keys)
-    ranked = (
+    return (
         d.join(F.broadcast(offsets), "_pid")
         .withColumn("rank", (F.row_number().over(w) + F.col("_off")).cast("long"))
         .drop("_pid", "_off")
     )
-    return ranked, d
 
 
 def apply_host_budgets(

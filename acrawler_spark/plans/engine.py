@@ -14,14 +14,19 @@ task (crawler.py:61-136), quantized to a logical clock:
     -> retry / recrawl / defer branches                     [lifecycle]
     -> commit as one snapshot                               [persistence]
 
-Steady-state round = THREE write actions: (1) pages stage (fetch join +
-parse + counters via observe), (2) seen delta with the Bloom build fused
-into its write, (3) frontier rewrite as a broadcast anti-join (windows run
-once) carrying next-round due stats in the manifest. Under AQE each query
-stage of an action is submitted as its own Spark job, so the job count is
-several times higher. items / fetch_log / failed / lineage are views of the
-pages deltas and metrics a view of the manifest (plans/views.py): a crawl
-writes only its own state.
+A round's state is its staged files; no DataFrame is cached. Steady-state
+round = FIVE write actions: (1) the selection (politeness windows + range
+partitioning; |selected| via observe), (2) pages stage (fetch join + parse
++ counters via observe), then, concurrently, (3) the frontier core (a
+broadcast anti-join of the staged selection plus lifecycle re-entries) and
+(4) the frontier's admitted part (the admit pipeline; |admitted| via
+observe), and (5) the seen delta with the Bloom build fused into its write,
+beside the next round's prefetched head. A round with corpus misses adds a
+sixth, the misses append; one with inbox seeds stages them first. Under
+AQE each query stage of an action is submitted as its own Spark job, so
+the job count is several times higher. items / fetch_log / failed /
+lineage are views of the pages deltas and metrics a view of the manifest
+(plans/views.py): a crawl writes only its own state.
 
 Determinism contract (tests/oracle.py mirrors it 1:1): logical clock
 now = t0 + round; total order (priority DESC, exetime ASC, fingerprint ASC);
@@ -34,27 +39,32 @@ import time
 from concurrent.futures import Future, ThreadPoolExecutor, as_completed, wait
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from acrawler_spark.functions.udfs import make_parse_page_udf
 from acrawler_spark.operators.dedup import BloomSidecar, admit_new_candidates
-from acrawler_spark.operators.frontier import (
-    FRONTIER_SCHEMA,
-    candidates_from_links,
-    seeds_frontier,
-)
+from acrawler_spark.operators.frontier import candidates_from_links, seeds_frontier
 from acrawler_spark.operators.politeness import (
     apply_host_budgets,
     global_schedule_rank,
+    range_partition,
     rank_keys,
 )
 from acrawler_spark.plans.views import items_view
-from acrawler_spark.session import local_frame
 from acrawler_spark.sources.store import CheckpointStore
 
-
+# Broadcast policy for the fetch join / frontier anti-joins: the selected
+# side is broadcast only when a PROVEN bound says it fits driver-side —
+# round_cap, or the committed frontier row count (an upper bound on any
+# round's selected set) staying under this many rows. Without the hint
+# AQE's initial SMJ plan lets the corpus map-side shuffle (the round's
+# largest payload) start before runtime conversion, so bounded rounds want
+# the hint — but an unbounded selected set must never be forced
+# driver-side (VERDICT r2 #2).
+BROADCAST_MAX_ROWS = 4_000_000
 
 
 @dataclass
@@ -85,16 +95,6 @@ class CrawlConfig:
     # pruning skips every corpus partition the round doesn't touch — small
     # rounds stop paying a full corpus scan
     corpus_bucket_n: int | None = None
-    # Broadcast policy for the fetch join / frontier anti-join: the selected
-    # side is broadcast only when a PROVEN bound says it fits driver-side —
-    # round_cap, or the committed frontier row count (an upper bound on any
-    # round's selected set) staying under broadcast_max_rows. Without the
-    # hint AQE's initial SMJ plan lets the corpus map-side shuffle (the
-    # round's largest payload) start before runtime conversion, so bounded
-    # rounds want the hint — but an unbounded selected set must never be
-    # forced driver-side (VERDICT r2 #2: the old flag could force-broadcast
-    # an arbitrarily large set).
-    broadcast_max_rows: int = 4_000_000
     # Live-HTTP transport (sources/netfetch.py): when set (a kwargs dict
     # for build_fetch_http — timeout_s/delay_s/max_bytes/user_agent), the
     # round fetches over the network via a per-partition urllib client
@@ -159,12 +159,12 @@ def build_fetch_join(
                scan streams through one stage (no shuffle), DPP prunes
                its bucket partitions from the broadcast values
     and misses are derived AFTER the hits delta is written, by
-    anti-joining the (cached) selected set against the round's own
+    anti-joining the (staged) selected set against the round's own
     written fingerprints (see ``build_misses``): O(selected) work with
     no second corpus scan and no sort — at web scale the corpus
     key-space is unbounded but the round's output is not.
     The broadcast hint is applied only when ``bounded`` proved the
-    selected set small (see CrawlConfig.broadcast_max_rows)."""
+    selected set small (see BROADCAST_MAX_ROWS)."""
     right = corpus.withColumnRenamed("url", "c_url")
     if "method" in corpus.columns:
         right = right.withColumnRenamed("method", "c_method")
@@ -208,7 +208,7 @@ def build_misses(
 ) -> DataFrame:
     """selected \\ hits == selected \\ corpus (the fetch-join is inner on
     the selected keys), so corpus misses fall out of the round's OWN
-    written delta: anti-join the cached selected set against the hit
+    written delta: anti-join the staged selected set against the hit
     fingerprints that were just written. No corpus key-space scan, no
     sort — ``hit_fps`` is a single-column scan of the round's pages
     delta, broadcast under the same proven bound as the selected side
@@ -228,34 +228,26 @@ def build_misses(
 
 @dataclass
 class Selection:
-    """One round's head (``CrawlEngine._head``): the persisted selection
-    and its schedule rank, then what its pages stage staged and counted."""
+    """One round's head (``CrawlEngine._head``): the schedule-ranked
+    selection read back from its staged delta, then what its pages stage
+    staged and counted."""
 
-    selected: DataFrame
     selected_ranked: DataFrame
-    rank_cache: DataFrame
-    bounded: bool  # broadcast hint proven safe (CrawlConfig.broadcast_max_rows)
+    bounded: bool  # broadcast hint proven safe (BROADCAST_MAX_ROWS)
     frontier_n: int  # upper bound on |frontier ∪ inbox|: the broadcast bounds
-    blocked: DataFrame | None  # the robots split's blocked half (None: no rules)
+    n_sel: int  # |selected|, observed by its write: the miss check's fast path
     obs: Observation | None = None  # pages-stage counters
     staged_cols: list[str] = field(default_factory=list)  # pages delta columns
-    n_sel: int = 0  # |selected|: the miss check's fast path
-
-    def caches(self) -> list[DataFrame]:
-        return [self.selected, self.rank_cache]
 
 
 @dataclass
 class Prefetch:
-    """Round ``rnd``'s head computed ahead by the previous round's commit;
-    ``fut`` yields its ``Selection``. ``release`` holds the launching
-    round's caches (the prefetch reads its admitted rows): they live on
-    this driver-side handle, so whoever retires it (the claim or a discard,
-    after a successful or a failed job) unpersists them."""
+    """Round ``rnd``'s head computed ahead by the previous round's commit
+    over that round's staged frontier files; ``fut`` yields its
+    ``Selection``."""
 
     rnd: int
     fut: Future
-    release: list[DataFrame]
 
 
 @dataclass
@@ -273,16 +265,15 @@ class RoundState:
     sel: Selection | None = None
     inbox_files: list[str] = field(default_factory=list)
     inbox_n: int = 0  # raw inbox url count — free at drain, bounds admitted
-    new_seed_rows: DataFrame | None = None
-    handed_off: bool = False  # caches now belong to the next round's prefetch
+    new_seed_rows: DataFrame | None = None  # the staged inbox delta
     # fetch
     pages: DataFrame | None = None
     counts: dict[str, int] = field(default_factory=dict)
     n_defer_user: int = 0
     # follow
     spec_items: DataFrame | None = None
-    admitted: DataFrame | None = None
-    core_union: DataFrame | None = None
+    admitted: DataFrame | None = None  # None: nothing can be admitted
+    core: DataFrame | None = None
 
     def __post_init__(self) -> None:
         self._last = self.start
@@ -291,11 +282,6 @@ class RoundState:
         t = time.monotonic()
         self.timing[label] = round(t - self._last, 2)
         self._last = t
-
-    def caches(self) -> list[DataFrame]:
-        # only those created so far: a stage may fail before the later ones
-        sel = self.sel.caches() if self.sel is not None else []
-        return [df for df in (*sel, self.admitted, self.new_seed_rows) if df is not None]
 
 
 class CrawlEngine:
@@ -424,15 +410,18 @@ class CrawlEngine:
 
     # -- one round: the head and the next-round prefetch -----------------------
 
-    def _prepare_round(self, rnd: int, frontier: DataFrame, frontier_n: int) -> Selection:
+    def _prepare_round(
+        self, rnd: int, frontier: DataFrame, frontier_n: int
+    ) -> tuple[DataFrame, DataFrame | None, bool]:
         """Round `rnd`'s selection over ``frontier``: eligibility pushdown →
-        robots split → salted politeness windows → round cap → persist
-        (+ rank). Lazy — ``_head`` runs it. `now` is deterministic
-        (t0 + rnd·round_seconds), so a prefetched selection is
-        byte-identical to what the round itself would compute.
+        robots split → salted politeness windows → round cap → range
+        partitioning for the rank. Lazy — ``_head`` stages it. `now` is
+        deterministic (t0 + rnd·round_seconds), so a prefetched selection
+        is byte-identical to what the round itself would compute.
 
         ``frontier_n`` bounds the frontier's row count (plus the round's raw
-        inbox url count) for the broadcast hints."""
+        inbox url count) for the broadcast hints. Returns (selected with its
+        range ``_pid``, the robots split's blocked rows, bounded)."""
         cfg = self.cfg
         now = cfg.t0 + rnd * cfg.round_seconds
         eligible = frontier.filter(F.col("exetime") <= F.lit(now))
@@ -453,90 +442,86 @@ class CrawlEngine:
         )
         if cfg.round_cap is not None:
             selected = selected.orderBy(*rank_keys()).limit(cfg.round_cap)
-        selected = selected.persist()
-        # schedule rank: the order the reference's workers would pop these
-        # tasks (score order). Exact global rank via range partitioning +
-        # offset merge (no single-partition Window — scale-safe for
-        # unbounded selected sets); it also orders within-round discovery.
-        selected_ranked, rank_cache = global_schedule_rank(selected)
         # Broadcast bound: round_cap if set, else the frontier row count
         # PLUS the raw inbox url count — together an upper bound on this
         # round's selected set (selected ⊆ eligible ⊆ frontier ∪ inbox). At
-        # a 10^10-row frontier the bound exceeds broadcast_max_rows and the
+        # a 10^10-row frontier the bound exceeds BROADCAST_MAX_ROWS and the
         # hint is withheld (AQE plans from runtime stats instead).
         sel_bound = cfg.round_cap if cfg.round_cap is not None else frontier_n
-        bounded = sel_bound <= cfg.broadcast_max_rows
-        return Selection(selected, selected_ranked, rank_cache, bounded, frontier_n, blocked)
+        return range_partition(selected), blocked, sel_bound <= BROADCAST_MAX_ROWS
 
     def _head(
         self, rnd: int, frontier: DataFrame, frontier_n: int, corpus: DataFrame
     ) -> Selection:
         """Round ``rnd``'s head, the same code whether the round runs it
-        inline or the previous round's commit prefetches it: the selection
-        (``_prepare_round``), the robots split's staged blocked rows, the
-        pages stage (fetch-join + parse + staged write) and the |selected|
-        count the miss check compares against. A failure releases the
-        head's caches and removes its staged files before it re-raises."""
-        sel = self._prepare_round(rnd, frontier, frontier_n)
+        inline or the previous round's commit prefetches it: the robots
+        split's staged blocked rows, the staged selection (its write counts
+        |selected| for the miss check) and the pages stage (fetch-join +
+        parse + staged write). A failure removes the head's staged files
+        before it re-raises."""
+        selected, blocked, bounded = self._prepare_round(rnd, frontier, frontier_n)
         try:
             # robots.txt admission (north-rule addition; absent in reference
             # — SURVEY §7). Blocked rows are dropped permanently (they stay
             # seen); _follow anti-joins the staged delta out of the frontier.
-            if sel.blocked is not None:
+            if blocked is not None:
                 with self._job(f"r{rnd} robots: blocked split write"):
                     self.store.write_delta(
                         "robots_blocked",
                         rnd,
-                        sel.blocked.select("url", "url_canon", "fingerprint", "host")
+                        blocked.select("url", "url_canon", "fingerprint", "host")
                         .withColumn("round", F.lit(rnd)),
                     )
+            # the selection is staged once, with its range ids: the pages
+            # join, the misses anti-join and the frontier core all read it
+            # back. Each join reader computes the schedule rank (the order
+            # the reference's workers would pop these tasks; it also orders
+            # within-round discovery) from the staged rows.
+            obs = Observation()
+            with self._job(f"r{rnd} selected: politeness + range partition + write"):
+                self.store.write_delta(
+                    "selected", rnd, selected.observe(obs, F.count(F.lit(1)).alias("n"))
+                )
+            sel = Selection(
+                global_schedule_rank(self.store.read_delta_one("selected", rnd)),
+                bounded, frontier_n, int(obs.get["n"] or 0),
+            )
             sel.obs, sel.staged_cols = self._run_pages_job(
                 rnd, sel, frontier.columns, corpus
             )
-            # one tiny scan of the cache the pages job just materialized (an
-            # Observation on the fetch join's AQE broadcast side is unreliable)
-            with self._job(f"r{rnd} miss check: cached selected count"):
-                sel.n_sel = sel.selected.count()
             return sel
         except BaseException:
-            self._unpersist(sel.caches())
             self.store.abort_uncommitted(rnd)
             raise
 
     def _inbox_pending(self) -> bool:
         return self.feeder is not None and bool(self.feeder.pending_files())
 
-    @staticmethod
-    def _unpersist(dfs: list[DataFrame]) -> None:
-        for df in dfs:
-            df.unpersist()
-
     def _launch_prefetch(
-        self, st: RoundState, core_stats: dict, n_admitted: int, max_round: int | None
+        self, st: RoundState, core_stats: dict, adm_stats: dict, max_round: int | None
     ) -> None:
-        """Submit round rnd+1's head while round rnd's commit tail drains,
-        over the IN-MEMORY next frontier (core ∪ admitted — byte-identical
-        to the committed frontier). Only when round rnd+1 has due work
+        """Submit round rnd+1's head while round rnd's seen write drains,
+        over round rnd's staged frontier files (core + admitted part: what
+        the commit will publish). Only when round rnd+1 has due work
         (admitted rows carry exetime == now; the core write observed the
         core's min exetime), never with inbox files pending (their seeds are
         missing from that frontier), and never at ``max_round``: None (a
         direct run_round() caller) launches none, so a prefetch nobody
-        claims cannot race another engine on the same store. On launch this
-        round's caches belong to the handle."""
+        claims cannot race another engine on the same store."""
         cfg, rnd = self.cfg, st.rnd
+        n_admitted = int(adm_stats["n"] or 0)
         core_min = core_stats["min_exetime"]
         due = n_admitted > 0 or (
             core_min is not None and core_min <= cfg.t0 + (rnd + 1) * cfg.round_seconds
         )
         if max_round is None or rnd >= max_round or not due or self._inbox_pending():
             return
-        cols = st.frontier.columns
-        frontier = st.core_union.unionByName(st.admitted.select(*cols))
-        # exact |frontier(rnd)|: both parts were counted by their jobs
+        # exact |frontier(rnd)|: both parts were counted by their writes
         frontier_n = int(core_stats["n"] or 0) + n_admitted
-        fut = self._submit(self._head, rnd + 1, frontier, frontier_n, st.corpus)
-        self._prefetch = Prefetch(rnd + 1, fut, st.caches())
-        st.handed_off = True
+        fut = self._submit(
+            self._head, rnd + 1, self.store.read_frontier(rnd), frontier_n, st.corpus
+        )
+        self._prefetch = Prefetch(rnd + 1, fut)
 
     def _claim_prefetch(self, rnd: int) -> Selection | None:
         """Round ``rnd``'s prefetched head, if one is pending for it and no
@@ -545,8 +530,8 @@ class CrawlEngine:
         discarded first: its staged write would race this round's inline
         rewrite of the same delta dir. ``result()`` waits out the in-flight
         pages write — normally the only thing left running, so this IS the
-        round's pages wall. A failed head has already released its caches
-        and staged files; the error re-raises here."""
+        round's pages wall. A failed head has already removed its staged
+        files; the error re-raises here."""
         pf = self._prefetch
         if pf is None:
             return None
@@ -554,26 +539,17 @@ class CrawlEngine:
             self.discard_prefetch()
             return None
         self._prefetch = None
-        try:
-            return pf.fut.result()
-        finally:
-            # the launching round's caches: every prefetch job is done
-            self._unpersist(pf.release)
+        return pf.fut.result()
 
     def discard_prefetch(self) -> None:
-        """Retire the pending prefetch, if any: wait out its in-flight job,
-        drop its caches and the launching round's, and remove the staged
-        (never-committed) deltas. Rare path — an inbox arrival between
-        launch and claim, or the crawl ending early (an ``until_ancestor``
-        stop, an error); run() calls it on the way out."""
+        """Retire the pending prefetch, if any: wait out its in-flight job
+        and remove its staged (never-committed) files. Rare path — an inbox
+        arrival between launch and claim, or the crawl ending early (an
+        ``until_ancestor`` stop, an error); run() calls it on the way out."""
         pf, self._prefetch = self._prefetch, None
         if pf is None:
             return
-        try:
-            sel_caches = pf.fut.result().caches()
-        except Exception:
-            sel_caches = []  # the failed head released its own selection
-        self._unpersist(pf.release + sel_caches)
+        wait([pf.fut])  # a failed head has already removed its own files
         self.store.abort_uncommitted(pf.rnd)
 
     def _stage_pages(
@@ -729,14 +705,10 @@ class CrawlEngine:
             timing={"mode": "inline" if claimed is None else "prefetch"},
             sel=claimed,
         )
-        try:
-            self._select(st)
-            self._fetch(st)
-            self._follow(st)
-            self._commit(st, max_round)
-        finally:
-            if not st.handed_off:
-                self._unpersist(st.caches())
+        self._select(st)
+        self._fetch(st)
+        self._follow(st)
+        self._commit(st, max_round)
         return {
             "round": rnd, **st.counts,
             "timing": st.timing, "wall_s": round(time.monotonic() - st.start, 3),
@@ -744,7 +716,8 @@ class CrawlEngine:
 
     def _select(self, st: RoundState) -> None:
         """The round's head, unless a claimed prefetch already ran it: the
-        inbox seeds join the round-start frontier, then ``_head``."""
+        inbox seeds are staged and join the round-start frontier, then
+        ``_head``."""
         if st.sel is not None:
             # the prefetch was claimed with an empty inbox; files dropped
             # since then drain next round (at-least-once, unchanged)
@@ -755,9 +728,13 @@ class CrawlEngine:
             # handlers.py:282-293)
             inbox_df, st.inbox_files, st.inbox_n = self.feeder.drain(st.rnd, st.now)
             if inbox_df is not None:
-                st.new_seed_rows = admit_new_candidates(
-                    inbox_df, st.seen, self.bloom
-                ).persist()
+                # staged once: the frontier union, the candidates' dedupe
+                # and the seen write all read the admitted seeds back
+                with self._job(f"r{st.rnd} inbox: seed admission write"):
+                    self.store.write_delta(
+                        "inbox", st.rnd, admit_new_candidates(inbox_df, st.seen, self.bloom)
+                    )
+                st.new_seed_rows = self.store.read_delta_one("inbox", st.rnd)
                 st.frontier = st.frontier.unionByName(
                     st.new_seed_rows.select(*st.frontier.columns)
                 )
@@ -779,11 +756,11 @@ class CrawlEngine:
         # the same proven bound, and appends a usually-empty second file.
         # Fast path: under the keyed-corpus contract (build_fetch_join) a
         # selected row matches at most one corpus row, so |hit rows| ==
-        # |selected| (the head's count) proves zero misses — the whole miss
-        # job (fp broadcast build + anti-join stage + delta append, ~1.5-2 s
-        # of driver-serial cost per round at any core count) is skipped.
-        # Steady-state rounds of a converged crawl are all hits, so this is
-        # the common case the round loop is sized for.
+        # |selected| (observed by the selection's write) proves zero misses —
+        # the whole miss job (fp broadcast build + anti-join stage + delta
+        # append, ~1.5-2 s of driver-serial cost per round at any core
+        # count) is skipped. Steady-state rounds of a converged crawl are
+        # all hits, so this is the common case the round loop is sized for.
         stats = [sel.obs.get]
         if int(stats[0]["n_selected"] or 0) != sel.n_sel:
             hit_fps = self.store.read_delta_one("pages", rnd).select("fingerprint")
@@ -874,13 +851,11 @@ class CrawlEngine:
                 seed_fps = st.new_seed_rows.select("fingerprint")
                 admitted = admitted.join(
                     F.broadcast(seed_fps)
-                    if st.inbox_n <= cfg.broadcast_max_rows else seed_fps,
+                    if st.inbox_n <= BROADCAST_MAX_ROWS else seed_fps,
                     "fingerprint",
                     "left_anti",
                 )
-            st.admitted = admitted.persist()
-        else:
-            st.admitted = local_frame(self.spark, [], FRONTIER_SCHEMA).persist()
+            st.admitted = admitted.select(*cols)
 
         # retry branch (crawler.py:98-114): failed & tries_done <= max_tries;
         # ignore_exception rows never retry (task.py:51)
@@ -918,32 +893,24 @@ class CrawlEngine:
         )
 
         # next frontier CORE = frontier \ selected (\ robots-blocked) +
-        # lifecycle re-entries — built once, consumed by (a) the frontier
-        # core writer and (b) the next-round prefetch's in-memory frontier
-        # (core ∪ admitted), which runs politeness for round rnd+1 without
-        # waiting for the frontier files to land. The selected fingerprints
-        # are read back from the staged pages delta (it holds exactly one
-        # hit or 404 miss row per selected row), never from the selection's
-        # plan: a prefetched selection's plan holds the previous round's
-        # core, so anti-joining it would chain every prefetched round's
-        # plan to the one before — and the politeness union reads its
-        # input twice, so the plan would double per round.
-        sel_fps = st.pages.select("fingerprint")
+        # lifecycle re-entries. The selected fingerprints are read back from
+        # the staged selection, so no round's plan references another's.
+        sel_fps = self.store.read_delta_one("selected", rnd).select("fingerprint")
         remaining = st.frontier.join(
             F.broadcast(sel_fps) if st.sel.bounded else sel_fps,
             "fingerprint", "left_anti",
         )
-        if st.sel.blocked is not None:
+        if self.robots is not None:
             # blocked ⊆ eligible ⊆ frontier ∪ inbox — round_cap does NOT
             # bound it (the cap applies after the robots split), so the
             # hint needs the frontier-count bound even when bounded=True
             # came from round_cap
-            robots_bounded = st.sel.frontier_n <= cfg.broadcast_max_rows
+            robots_bounded = st.sel.frontier_n <= BROADCAST_MAX_ROWS
             fps = self.store.read_delta_one("robots_blocked", rnd).select("fingerprint")
             remaining = remaining.join(
                 F.broadcast(fps) if robots_bounded else fps, "fingerprint", "left_anti"
             )
-        st.core_union = (
+        st.core = (
             remaining.select(*cols)
             .unionByName(retries.select(*cols))
             .unionByName(recrawls.select(*cols))
@@ -954,58 +921,14 @@ class CrawlEngine:
         """Staged writes, the next-round prefetch, then the atomic manifest
         bump (its entry carries the round's counters and ``timing``).
 
-        Per-round action budget (VERDICT r1 scaling fix): THREE write
-        actions in the steady state — pages stage, seen (+Bloom fused),
-        frontier; AQE runs each query stage of an action as its own Spark
-        job — and the seen/frontier writes (plus the optional spec-items
-        write) are SUBMITTED CONCURRENTLY from driver threads, so their
-        per-stage scheduling latencies overlap instead of serializing.
-        items/fetch_log/failed/lineage are views of the pages deltas and
-        metrics a view of the manifest; every counter rides a write via
-        observe(); nothing is counted with a standalone action."""
+        The frontier core, the frontier's admitted part (the one action that
+        runs the admit pipeline) and the optional spec-items write are
+        SUBMITTED CONCURRENTLY from driver threads, so their per-stage
+        scheduling latencies overlap instead of serializing. The seen write
+        (+Bloom fused) reads the staged admitted part, so it follows that
+        write, beside round rnd+1's prefetched head. Every counter rides a
+        write via observe(); nothing is counted with a standalone action."""
         cfg, rnd, now = self.cfg, st.rnd, st.now
-        cols = st.frontier.columns
-        # admitted is the empty literal when nothing can be admitted
-        has_admitted = bool(cfg.follow_patterns) or st.new_seed_rows is not None
-
-        def _cache_job() -> int:
-            with self._job(f"r{rnd} admitted: admit pipeline + cache"):
-                return st.admitted.count()
-
-        def _seen_job() -> int:
-            # seen delta + Bloom maintenance fused into one write job over
-            # the hot admitted cache. Schedule-time semantics: seen grows in
-            # the same commit that admits the rows (scheduler.py:45-50).
-            if not has_admitted:
-                return 0
-            new_seen = st.admitted.select(
-                "fingerprint",
-                F.lit(rnd).alias("added_round"),
-                F.lit(0).alias("_is_seed"),
-            )
-            if st.new_seed_rows is not None:
-                new_seen = new_seen.unionByName(
-                    st.new_seed_rows.select(
-                        "fingerprint",
-                        F.lit(rnd).alias("added_round"),
-                        F.lit(1).alias("_is_seed"),
-                    )
-                )
-            obs_seen = Observation()
-            # admitted-vs-seed split rides the SAME write job (observe on a
-            # marker column, dropped before the write) — an inbox round runs
-            # exactly the job count of a non-inbox round, no standalone count
-            new_seen = new_seen.observe(
-                obs_seen,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("_is_seed").alias("n_seed"),
-            ).drop("_is_seed")
-            if self.bloom is not None:
-                new_seen = self.bloom.updating_scan(new_seen)
-            with self._job(f"r{rnd} seen: dedup+bloom+write (materializes admitted)"):
-                self.store.write_delta("seen", rnd, new_seen)
-            got = obs_seen.get
-            return int(got["n"] or 0) - int(got["n_seed"] or 0)
 
         def _frontier_obs(df: DataFrame) -> tuple[DataFrame, Observation]:
             obs = Observation()
@@ -1017,50 +940,50 @@ class CrawlEngine:
             ), obs
 
         def _frontier_core_job() -> dict:
-            # The anti-join's right side is the selected fingerprints read
-            # back from the pages delta, so the politeness windows are NOT
-            # recomputed and
+            # The anti-join's right side is the staged selection's
+            # fingerprints, so the politeness windows are NOT recomputed and
             # the big frontier scan streams through one stage. Requires the
             # one-row-per-fingerprint frontier invariant (held by:
             # schedule-time seen admission + the inbox-vs-candidates
             # dedupe). Broadcast is hinted only under the proven bound
-            # (round_cap / frontier_n ≤ broadcast_max_rows); otherwise AQE
+            # (round_cap / frontier_n ≤ BROADCAST_MAX_ROWS); otherwise AQE
             # picks from runtime stats (an unbounded selected set must not
-            # be forced driver-side). SPLIT COMMIT: this core part touches
-            # only the prior frontier and the written pages (and robots)
-            # deltas — never `admitted` — so it runs
-            # CONCURRENTLY with the admitted materialization instead of
-            # serializing behind it; the admitted branch appends after.
-            new_frontier, obs = _frontier_obs(st.core_union)
+            # be forced driver-side).
+            new_frontier, obs = _frontier_obs(st.core)
             with self._job(f"r{rnd} frontier core: anti-join + re-entries write"):
                 self.store.write_frontier(rnd, new_frontier)
             return obs.get
 
         def _frontier_admitted_job() -> dict:
-            if not has_admitted:
+            if st.admitted is None:
                 return {"n": 0, "min_exetime": None, "n_due_now": 0}
-            adf, obs = _frontier_obs(st.admitted.select(*cols))
-            with self._job(f"r{rnd} frontier admitted: append"):
+            adf, obs = _frontier_obs(st.admitted)
+            with self._job(f"r{rnd} frontier admitted: admit pipeline + write"):
                 self.store.append_frontier(rnd, adf)
             return obs.get
+
+        def _seen_job() -> None:
+            # seen delta + Bloom maintenance fused into one write job over
+            # the staged admitted part and inbox seeds. Schedule-time
+            # semantics: seen grows in the same commit that admits the rows
+            # (scheduler.py:45-50).
+            parts = [st.new_seed_rows] if st.new_seed_rows is not None else []
+            if st.admitted is not None:
+                parts.append(self.store.read_admitted(rnd))
+            if not parts:
+                return
+            new_seen = reduce(
+                DataFrame.unionByName, [part.select("fingerprint") for part in parts]
+            ).withColumn("added_round", F.lit(rnd))
+            if self.bloom is not None:
+                new_seen = self.bloom.updating_scan(new_seen)
+            with self._job(f"r{rnd} seen: dedup+bloom+write"):
+                self.store.write_delta("seen", rnd, new_seen)
 
         def _items_job() -> None:
             with self._job(f"r{rnd} items: spec extraction write"):
                 self.store.write_delta("items", rnd, st.spec_items)
 
-        # The admitted cache must be materialized by exactly ONE job before
-        # any second consumer touches it: submitting two consumers with a
-        # cold cache makes every task of one convoy on the other's
-        # BlockInfoManager write-locks while it computes the same
-        # partitions (event-log evidence at local[16], bench round 1: two
-        # identical 32-task stages — candidates Window + Bloom MapInPandas
-        # + Union lineage — 448 task-seconds of run time against 49 CPU-
-        # seconds, ~90% lock-wait). items/frontier-core read only
-        # the staged deltas and the prior frontier (all written by the
-        # fetch phase) — they never touch admitted,
-        # so they run beside the materializer; the seen write and the
-        # admitted append then consume a hot cache (the append must also
-        # follow the core overwrite, which clears the dir it lands in).
         st.tick("commit_dag_build")  # py4j plan construction since misses tick
         futs: list[Future] = []
 
@@ -1069,20 +992,19 @@ class CrawlEngine:
             return futs[-1]
 
         try:
-            fut_cache = submit(_cache_job)
-            fut_fcore = submit(_frontier_core_job)
+            fut_core = submit(_frontier_core_job)
+            fut_adm = submit(_frontier_admitted_job)
             extras = [submit(_items_job)] if st.spec_items is not None else []
-            n_adm_cached = fut_cache.result()
-            fut_seen = submit(_seen_job)  # hot cache: bloom + write tail
-            core = fut_fcore.result()
-            # both parts of the next frontier are counted: round rnd+1's
-            # prefetch overlaps the admitted append, the seen tail and the
-            # spec-items write
-            self._launch_prefetch(st, core, n_adm_cached, max_round)
-            adm = _frontier_admitted_job()
+            adm = fut_adm.result()
+            # the seen write reads the staged admitted part; its Bloom update
+            # also must not race the admit pipeline's Bloom probe
+            fut_seen = submit(_seen_job)
+            core = fut_core.result()
+            # both parts of the next frontier have landed and are counted:
+            # round rnd+1's prefetch overlaps the seen and spec-items writes
+            self._launch_prefetch(st, core, adm, max_round)
             for f in as_completed([fut_seen, *extras]):
                 f.result()  # the first failure raises at once
-            n_admitted = fut_seen.result()
         finally:
             # a failed commit leaves no write of its own running
             wait(futs)
@@ -1093,6 +1015,7 @@ class CrawlEngine:
                 default=None,
             ),
         }
+        n_admitted = int(adm["n"] or 0)
         # rows still due right now = politeness-deferred + retries + admitted
         # (all three carry exetime == now; recrawls, user-deferred and
         # ineligible rows are strictly future). Reported "deferred" folds in

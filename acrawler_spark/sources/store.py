@@ -9,9 +9,16 @@ same scale properties Iceberg would give:
   production this binds 1:1 to an Iceberg append + bucket(fingerprint)
   partitioning — no rewrite of the big table ever happens.
 * ``frontier`` is bounded (the active crawl horizon), so it is rewritten
-  per round (Iceberg: copy-on-write MERGE).
+  per round (Iceberg: copy-on-write MERGE), in two parts written side by
+  side: the core (``frontier/round=N``: the previous frontier minus the
+  round's selection, plus lifecycle re-entries) and the admitted links
+  (``frontier/admitted_round=N``). ``read_frontier`` reads both.
 * ``pages`` (the round's fetched and parsed pages), ``robots_blocked`` and
   the ItemSpec ``items`` rows are append-only round deltas.
+* ``selected`` (the round's ranked selection) and ``inbox`` (its admitted
+  inbox seeds) are TRANSIENT deltas: the round's intermediates that more than
+  one of its actions reads, staged once and read back instead of cached.
+  ``commit_round`` drops them, so a committed round keeps none.
 * ``items`` / ``fetch_log`` / ``failed`` / ``lineage`` are views of the
   pages deltas and ``metrics`` a view of the manifest (plans/views.py):
   no round writes them.
@@ -34,7 +41,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 APPEND_TABLES = ("seen", "items", "pages", "robots_blocked")
-REWRITE_TABLES = ("frontier",)
+TRANSIENT_TABLES = ("selected", "inbox")
 
 MANIFEST = "_manifest.json"
 
@@ -75,13 +82,16 @@ class CheckpointStore:
     def _frontier_path(self, rnd: int) -> str:
         return os.path.join(self.root, "frontier", f"round={rnd}")
 
+    def _admitted_path(self, rnd: int) -> str:
+        return os.path.join(self.root, "frontier", f"admitted_round={rnd}")
+
     # -- write (staged; becomes visible only at commit_round) ----------------
 
     def write_delta(self, table: str, rnd: int, df: DataFrame) -> None:
         """Write the DataFrame's own partitioning verbatim: pages rows carry
         page text and stream out of the fetch join's one stage, and the seen
         delta rides the Bloom bucket layout."""
-        assert table in APPEND_TABLES, table
+        assert table in APPEND_TABLES + TRANSIENT_TABLES, table
         df.write.mode("overwrite").parquet(self._delta_path(table, rnd))
 
     def append_delta(self, table: str, rnd: int, df: DataFrame) -> None:
@@ -104,14 +114,18 @@ class CheckpointStore:
         df.write.mode("overwrite").parquet(self._frontier_path(rnd))
 
     def append_frontier(self, rnd: int, df: DataFrame) -> None:
-        """Append a second file set into an already-staged frontier rewrite
-        (the admitted-candidates branch, written after the seen job has
-        materialized the admitted cache — see engine.run_round's split
-        commit). Crash-safe under the same protocol as append_delta: an
-        uncommitted round's frontier dir is dropped by abort_uncommitted."""
-        df.write.mode("append").parquet(self._frontier_path(rnd))
+        """Write the frontier's second part, the round's admitted links, into
+        its own directory beside the core rewrite: the two writes never
+        touch each other's files, so they run concurrently. Crash-safe under
+        the same protocol as the core: abort_uncommitted drops both."""
+        df.write.mode("overwrite").parquet(self._admitted_path(rnd))
 
     def commit_round(self, rnd: int, extra: dict | None = None) -> None:
+        """Drop the round's transient deltas (every action that read them is
+        done), then bump the manifest atomically. A crash in between leaves
+        the round uncommitted, and its re-run stages them again."""
+        for t in TRANSIENT_TABLES:
+            shutil.rmtree(self._delta_path(t, rnd), ignore_errors=True)
         m = self.read_manifest()
         m["round"] = rnd
         m["committed"] = sorted(set(m.get("committed", [])) | {rnd})
@@ -120,23 +134,37 @@ class CheckpointStore:
         self._write_manifest(m)
 
     def abort_uncommitted(self, rnd: int) -> None:
-        """Drop staged files from a round that never committed (crash replay)."""
-        for t in APPEND_TABLES:
+        """Drop staged files from a round that never committed (crash replay):
+        its deltas, transient deltas and both frontier parts."""
+        for t in APPEND_TABLES + TRANSIENT_TABLES:
             shutil.rmtree(self._delta_path(t, rnd), ignore_errors=True)
         shutil.rmtree(self._frontier_path(rnd), ignore_errors=True)
+        shutil.rmtree(self._admitted_path(rnd), ignore_errors=True)
 
     # -- read (only committed rounds) ----------------------------------------
 
     def read_frontier(self, rnd: int | None = None) -> DataFrame | None:
+        """Round ``rnd``'s frontier (default: the last committed round): the
+        core plus, when the round admitted links, the admitted part. Also
+        valid before the commit, for the next round's prefetched head. A
+        store written before the split (admitted rows inside the core dir)
+        reads the same way."""
         rnd = self.last_round if rnd is None else rnd
         if rnd < 0:
             return None
-        return self.spark.read.parquet(self._frontier_path(rnd))
+        paths = [self._frontier_path(rnd)]
+        if os.path.exists(self._admitted_path(rnd)):
+            paths.append(self._admitted_path(rnd))
+        return self.spark.read.parquet(*paths)
+
+    def read_admitted(self, rnd: int) -> DataFrame:
+        """The admitted part of round ``rnd``'s frontier alone."""
+        return self.spark.read.parquet(self._admitted_path(rnd))
 
     def read_delta_one(self, table: str, rnd: int) -> DataFrame:
         """Read one round's staged delta (also valid pre-commit within the
-        round that staged it — the engine stages `pages` then derives the
-        round's other tables from its columnar scan)."""
+        round that staged it — the engine stages `selected` and `pages` and
+        derives the round's other writes from their columnar scans)."""
         return self.spark.read.parquet(self._delta_path(table, rnd))
 
     def read_appended(self, table: str, upto_round: int | None = None) -> DataFrame | None:

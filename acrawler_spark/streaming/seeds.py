@@ -19,6 +19,8 @@ ingestion boundary only.
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,10 +78,14 @@ class SeedFeeder:
 
 def push_start_urls(inbox_dir: str, urls: list[str], batch_id: str = "seeds") -> str:
     """External-producer helper (redis_push_start_urls analog,
-    utils.py:164-188): atomically drop a url batch into the inbox."""
+    utils.py:164-188): atomically drop a url batch into the inbox. Every
+    drop gets its own file (``batch_id`` is its name's prefix), so batches
+    pushed before one drain all arrive, like SADDs to the reference's set,
+    and concurrent producers never share a temp file."""
     os.makedirs(inbox_dir, exist_ok=True)
-    tmp = os.path.join(inbox_dir, f"_tmp_{batch_id}.txt")
-    dst = os.path.join(inbox_dir, f"{batch_id}.txt")
+    name = f"{batch_id}-{time.time_ns()}-{uuid.uuid4().hex}.txt"
+    tmp = os.path.join(inbox_dir, f"_tmp_{name}")
+    dst = os.path.join(inbox_dir, name)
     with open(tmp, "w") as f:
         f.write("\n".join(urls))
     os.replace(tmp, dst)

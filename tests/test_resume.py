@@ -5,12 +5,15 @@ reference analog: persistent crawl + shutdown put-back, crawler.py:558-638)."""
 import os
 import shutil
 import time
+from dataclasses import replace
 
 import pytest
+from pyspark.sql import functions as F
 
 from acrawler_spark.plans.engine import CrawlConfig, CrawlEngine
 from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
 from acrawler_spark.sources.store import CheckpointStore
+from acrawler_spark.streaming.seeds import push_start_urls
 
 FOLLOW = [r"site\d+\.test"]
 
@@ -128,8 +131,6 @@ def test_crash_with_prefetch_in_flight_resumes_exactly(spark, tmp_path):
 
     CrawlEngine(spark, _cfg(), s_resume).run(corpus)
     assert _final_state(s_resume) == _final_state(s_full)
-    pf = pending[0]
-    e1._unpersist(pf.release + pf.fut.result().caches())
 
 
 def test_crash_mid_commit_waits_for_sibling_writes(spark, tmp_path):
@@ -167,3 +168,59 @@ def test_crash_mid_commit_waits_for_sibling_writes(spark, tmp_path):
     assert s_resume.last_round == 1
     CrawlEngine(spark, _cfg(), s_resume).run(corpus)
     assert _final_state(s_resume) == _final_state(s_full)
+
+
+@pytest.mark.parametrize("kill_at", ["pages", "seen"])
+def test_kill_inside_a_round_resumes_exactly(spark, tmp_path, kill_at):
+    """The process dies inside round 2, which drains an inbox seed drop:
+    ``pages`` kills it after the staged selection and before the pages
+    write, ``seen`` after the frontier's admitted part and before the seen
+    write. A killed process removes nothing, so the round's staged
+    selection, inbox seeds (and admitted part) are left behind. A fresh
+    engine drops them before it runs a round, and the crawl then finishes
+    in exactly the uninterrupted crawl's state, the inbox seed fetched
+    once."""
+    corpus = fixture_corpus_df(spark, n_hosts=3, depth=2, fanout=3)
+    inbox_url = "http://site2.test/p/0"
+
+    def start(root):
+        cfg = replace(_cfg(), seeds_inbox=root + "_inbox")
+        store = CheckpointStore(root, spark)
+        engine = CrawlEngine(spark, cfg, store)
+        engine.bootstrap()
+        engine.run_round(1, corpus)
+        push_start_urls(cfg.seeds_inbox, [inbox_url])
+        return cfg, store, engine
+
+    _, s_full, e_full = start(str(tmp_path / "full"))
+    e_full.run(corpus)
+
+    root = str(tmp_path / "part")
+    cfg, store, e1 = start(root)
+    write_delta = store.write_delta
+
+    def dying_write(table, rnd, df):
+        if (table, rnd) == (kill_at, 2):
+            raise RuntimeError("killed in round 2")
+        write_delta(table, rnd, df)
+
+    store.write_delta = dying_write
+    store.abort_uncommitted = lambda rnd: None  # a killed process cleans nothing
+    with pytest.raises(RuntimeError, match="killed"):
+        e1.run(corpus)
+    staged = ["selected/delta_round=2", "inbox/delta_round=2"]
+    if kill_at == "seen":
+        staged.append("frontier/admitted_round=2")
+    for d in staged:
+        assert os.path.isdir(os.path.join(root, d)), d
+
+    s_resume = CheckpointStore(root, spark)
+    CrawlEngine(spark, cfg, s_resume).run(corpus, max_rounds=1)
+    assert s_resume.last_round == 1
+    for d in staged:
+        assert not os.path.exists(os.path.join(root, d)), f"stale {d}"
+
+    CrawlEngine(spark, cfg, s_resume).run(corpus)
+    assert _final_state(s_resume) == _final_state(s_full)
+    log = s_resume.read_appended("fetch_log")
+    assert log.filter(F.col("url_canon") == inbox_url).count() == 1

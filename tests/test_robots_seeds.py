@@ -123,3 +123,19 @@ def test_seed_inbox_ingestion(spark, tmp_path):
     assert log.filter(F.col("host") == "site2.test").count() > 0
     # delivered once: file moved to _consumed, re-running adds nothing
     assert not [f for f in (tmp_path / "inbox").iterdir() if f.is_file()]
+
+
+def test_two_default_pushes_before_one_drain_admit_both(spark, tmp_path):
+    """Two producers push with the default batch id before the crawl drains
+    the inbox: both batches are admitted (the reference's SADD keeps every
+    url), and both drops are consumed."""
+    corpus = fixture_corpus_df(spark, n_hosts=3, depth=1, fanout=2)
+    inbox = str(tmp_path / "inbox")
+    push_start_urls(inbox, ["http://site1.test/p/0"])
+    push_start_urls(inbox, ["http://site2.test/p/0"])
+    cfg = CrawlConfig(seeds=seed_urls(1), bloom_bits=1 << 14, seeds_inbox=inbox)
+    store = CheckpointStore(str(tmp_path / "s"), spark)
+    CrawlEngine(spark, cfg, store).run(corpus)
+    fetched = {r["url_canon"] for r in store.read_appended("fetch_log").collect()}
+    assert {"http://site1.test/p/0", "http://site2.test/p/0"} <= fetched, fetched
+    assert not [f for f in (tmp_path / "inbox").iterdir() if f.is_file()]

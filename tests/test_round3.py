@@ -30,7 +30,7 @@ def _run(spark, tmp_path, cfg, corpus):
 # -- broadcast bound (VERDICT r2 #2 / ADVICE #1) ---------------------------
 
 def test_broadcast_hint_gated_by_bound(spark):
-    """bounded=False (no cap, frontier above broadcast_max_rows) must leave
+    """bounded=False (no cap, frontier above BROADCAST_MAX_ROWS) must leave
     NO broadcast hint in the fetch-join plan — an unbounded selected set
     can never be forced driver-side; bounded=True hints it."""
     from acrawler_spark.operators.frontier import seeds_frontier
@@ -52,9 +52,13 @@ def test_broadcast_hint_gated_by_bound(spark):
     assert "broadcast" in plan_hint.lower()
 
 
-def test_unbounded_config_crawls_without_forced_broadcast(spark, tmp_path):
+def test_unbounded_config_crawls_without_forced_broadcast(spark, tmp_path, monkeypatch):
     """A no-budget/no-cap config with the bound forced past the frontier
     size still crawls correctly (AQE plans from runtime stats)."""
+    import acrawler_spark.plans.engine as engine
+
+    # bound can never be proven -> no hint
+    monkeypatch.setattr(engine, "BROADCAST_MAX_ROWS", 0)
     rows = [
         ("http://a.test/0", '<a href="http://a.test/1">n</a>'),
         ("http://a.test/1", "<p>leaf</p>"),
@@ -62,7 +66,6 @@ def test_unbounded_config_crawls_without_forced_broadcast(spark, tmp_path):
     cfg = CrawlConfig(
         seeds=["http://a.test/0"],
         follow_patterns=[r"a\.test"],
-        broadcast_max_rows=0,  # bound can never be proven -> no hint
         bloom_bits=1 << 12,
     )
     store, history = _run(spark, tmp_path, cfg, _corpus(spark, rows))

@@ -520,6 +520,34 @@ def test_failed_prefetch_releases_caches_and_staged_files(spark, tmp_path, where
     assert not leaked, f"{len(leaked)} cached RDDs outlived the failed crawl"
 
 
+def test_no_cache_outlives_a_round(spark, tmp_path):
+    """A pipelined run() caches nothing across rounds: when each run_round
+    returns, also while the next round's prefetched head is in flight, no
+    RDD is persisted that was not persisted before the crawl. A round's
+    intermediates live in its staged files."""
+    from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
+
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keys())
+    after_round = []
+
+    class ProbeEngine(CrawlEngine):
+        def run_round(self, rnd, corpus, max_round=None):
+            out = super().run_round(rnd, corpus, max_round=max_round)
+            leaked = set(jsc.getPersistentRDDs().keys()) - cached_before
+            after_round.append((rnd, out["timing"]["mode"], len(leaked)))
+            return out
+
+    cfg = CrawlConfig(
+        seeds=seed_urls(2), follow_patterns=[r"site\d+\.test"], bloom_bits=1 << 14
+    )
+    store = CheckpointStore(str(tmp_path / "s"), spark)
+    ProbeEngine(spark, cfg, store).run(fixture_corpus_df(spark, n_hosts=2, depth=2, fanout=3))
+    assert len(after_round) >= 3, after_round
+    assert {mode for _, mode, _ in after_round[1:]} == {"prefetch"}, after_round
+    assert all(n == 0 for _, _, n in after_round), after_round
+
+
 def _crawl_state(store) -> dict:
     """Everything a crawl leaves in its store, in comparable form."""
     from tests.test_engine_e2e import schedule_of
